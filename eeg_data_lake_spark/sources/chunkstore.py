@@ -72,16 +72,6 @@ from eeg_data_lake_spark.sources.bucketed import write_bucketed
 from eeg_data_lake_spark.sources.txlog import TxTable
 
 
-def _stage_serially() -> bool:
-    """Same env gate as txpair.chained_commit: =off forces the serial
-    job order (A/B probes, one-in-flight-job deployments)."""
-    import os
-
-    return (
-        os.environ.get("SPARK_GRAFT_STAGE_CONCURRENT", "auto") == "off"
-    )
-
-
 def storage_accounting(
     logical: DataFrame, physical: DataFrame
 ) -> DataFrame:
@@ -210,33 +200,24 @@ class ChunkStore:
                 # the persisted `rows`, so the chunker itself runs
                 # once (block-level cache locks serialize first
                 # computation) and the legs overlap their own agg +
-                # write work. Measured (probes/txn_anatomy.py):
-                # put = 1.9 s of which the two write jobs are 1.77 s
-                # run back-to-back — overlap reclaims the smaller leg.
-                # SPARK_GRAFT_STAGE_CONCURRENT=off forces the serial
-                # staging order (A/B probes; same gate as txpair).
-                if _stage_serially():
-                    chunks_staged = self.chunks.stage(
-                        novel.select("chunk_md5", "length", "data")
-                    )
-                    man_staged = self.manifests.stage_upsert(
-                        manifests, ["doc_id"]
-                    )
-                else:
-                    from concurrent.futures import ThreadPoolExecutor
+                # write work. Measured (OPTIMIZATION_r11.md, "Where the
+                # round-10 verdict's top task actually went"): put =
+                # 1.9 s of which the two write jobs are 1.77 s run
+                # back-to-back — overlap reclaims the smaller leg.
+                from concurrent.futures import ThreadPoolExecutor
 
-                    with ThreadPoolExecutor(max_workers=2) as pool:
-                        f_chunks = pool.submit(
-                            self.chunks.stage,
-                            novel.select("chunk_md5", "length", "data"),
-                        )
-                        f_man = pool.submit(
-                            self.manifests.stage_upsert,
-                            manifests,
-                            ["doc_id"],
-                        )
-                        chunks_staged = f_chunks.result()
-                        man_staged = f_man.result()
+                with ThreadPoolExecutor(max_workers=2) as pool:
+                    f_chunks = pool.submit(
+                        self.chunks.stage,
+                        novel.select("chunk_md5", "length", "data"),
+                    )
+                    f_man = pool.submit(
+                        self.manifests.stage_upsert,
+                        manifests,
+                        ["doc_id"],
+                    )
+                    chunks_staged = f_chunks.result()
+                    man_staged = f_man.result()
                 self.chunks.commit_staged(
                     chunks_staged, txn_id=f"{txn_id}:chunks"
                 )
@@ -410,21 +391,15 @@ class ChunkStore:
         # locally the stats job hides entirely under the rewrite wall;
         # at scale the metadata-only stats pass rides alongside the
         # byte-moving rewrite instead of extending it.
-        if _stage_serially():
-            n_all, b_all, n_live, b_live = stats_df.collect()[0]
-            self.chunks.overwrite(
-                live.select("chunk_md5", "length", "data"), txn_id=txn_id
-            )
-        else:
-            from concurrent.futures import ThreadPoolExecutor
+        from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=1) as pool:
-                f_stats = pool.submit(lambda: stats_df.collect()[0])
-                self.chunks.overwrite(
-                    live.select("chunk_md5", "length", "data"),
-                    txn_id=txn_id,
-                )
-                n_all, b_all, n_live, b_live = f_stats.result()
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            f_stats = pool.submit(lambda: stats_df.collect()[0])
+            self.chunks.overwrite(
+                live.select("chunk_md5", "length", "data"),
+                txn_id=txn_id,
+            )
+            n_all, b_all, n_live, b_live = f_stats.result()
         return self.spark.createDataFrame(
             [
                 (

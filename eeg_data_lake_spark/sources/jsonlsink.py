@@ -183,7 +183,7 @@ class JsonlShardsDataSource(DataSource):
         # removal to commit() (manifest swapped first, then old shards
         # reclaimed), so a job that fails mid-write leaves the previous
         # good export fully intact — same manifest-last discipline as
-        # append mode and publish.py's pointer swap.
+        # append mode.
         return JsonlShardWriter(self.options, overwrite=overwrite)
 
 

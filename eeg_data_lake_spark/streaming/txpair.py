@@ -295,7 +295,8 @@ def chained_commit(
     run up front (a refused batch commits NOTHING instead of a prefix
     — strictly fewer partial states, and replay after the fix
     converges identically), and a mid-staging failure likewise commits
-    nothing. Measured motivation (probes/txn_anatomy.py, sf0.1): the
+    nothing. Measured motivation (OPTIMIZATION_r11.md, "Where the
+    round-10 verdict's top task actually went", sf0.1): the
     per-trigger cost is ~0.39 s per leg of Spark data-write job vs
     ~5 ms of manifest fsync+replay — overlapping the jobs is the fix;
     batching the fsync records would have saved nothing.
@@ -305,15 +306,6 @@ def chained_commit(
         if known_committed is not None and txn in known_committed:
             return known_committed[txn]
         return tbl.has_txn(txn)
-
-    # SPARK_GRAFT_STAGE_CONCURRENT=off forces the serial path globally
-    # (A/B probes, deployments that want one in-flight write job per
-    # sink); the flag never turns concurrency ON for a caller that did
-    # not assert the stronger derivation contract.
-    import os
-
-    if os.environ.get("SPARK_GRAFT_STAGE_CONCURRENT", "auto") == "off":
-        stage_concurrently = False
 
     if not stage_concurrently:
         if not committed(table, batch_txn(sink_id, batch_id)):

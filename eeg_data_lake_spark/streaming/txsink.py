@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from eeg_data_lake_spark.sources.txlog import TxTable
+from eeg_data_lake_spark.streaming.txpair import chained_commit
 
 
 def txtable_batch_writer(table: TxTable, sink_id: str):
@@ -25,14 +26,11 @@ def txtable_batch_writer(table: TxTable, sink_id: str):
     logical stream (use the checkpoint path or a query name)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        from eeg_data_lake_spark.streaming.txpair import contract_gate
-
-        # per-trigger schema contract: a mid-stream upstream schema
-        # change must fail THIS trigger loudly (and replay clean after
-        # the fix), not land whatever the parquet append accepts
-        fold = contract_gate(table, batch_df)
-        table.append(batch_df, txn_id=f"{sink_id}:batch-{batch_id}")
-        fold()
+        # a corpus with no index legs: chained_commit applies the
+        # per-trigger schema contract (a mid-stream upstream schema
+        # change fails THIS trigger loudly and replays clean after the
+        # fix) and commits under batch_txn's "{sink_id}:batch-{batch_id}"
+        chained_commit(table, batch_df, [], sink_id, batch_id)
 
     return process
 

@@ -1,5 +1,5 @@
 """Bucketed co-located joins: the write-once shuffle pays off as a
-zero-exchange join plan, and upserts preserve table contents."""
+zero-exchange join plan, and the writer reclaims only its own orphans."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import pytest
 
 from eeg_data_lake_spark.plans import count_exchanges, join_strategies
 from eeg_data_lake_spark.sources.bucketed import bucketed_join, write_bucketed
-from eeg_data_lake_spark.sources.merge import merge_upsert
 
 
 @pytest.fixture(autouse=True)
@@ -56,179 +55,6 @@ def test_bucketed_join_matches_plain_join(spark, sf_dir, bucketed_tables):
     c = t(spark, sf_dir, "customer")
     expected = o.join(c, o.o_custkey == c.c_custkey).count()
     assert got == expected
-
-
-def test_merge_upsert_semantics(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)], "id long, tag string, v double"
-    )
-    merge_upsert(spark, path, base, keys=["id"])
-    updates = spark.createDataFrame(
-        [(2, "B", 20.0), (4, "d", 4.0)], "id long, tag string, v double"
-    )
-    merge_upsert(spark, path, updates, keys=["id"])
-    rows = {r.id: (r.tag, r.v) for r in spark.read.parquet(path).collect()}
-    assert rows == {1: ("a", 1.0), 2: ("B", 20.0), 3: ("c", 3.0), 4: ("d", 4.0)}
-
-
-def test_merge_upsert_partitioned_touches_only_hit_partitions(spark, tmp_path):
-    path = str(tmp_path / "ptbl")
-    base = spark.createDataFrame(
-        [(1, "p1", 1.0), (2, "p1", 2.0), (3, "p2", 3.0)],
-        "id long, part string, v double",
-    )
-    merge_upsert(spark, path, base, keys=["id"], partition_by=["part"])
-    updates = spark.createDataFrame([(2, "p1", 20.0)], "id long, part string, v double")
-    merge_upsert(spark, path, updates, keys=["id"], partition_by=["part"])
-    rows = {r.id: r.v for r in spark.read.parquet(path).collect()}
-    assert rows == {1: 1.0, 2: 20.0, 3: 3.0}
-
-
-def test_merge_upsert_rejects_partition_moving_updates(spark, tmp_path):
-    import pytest
-    from pyspark.sql import functions as F
-
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(1, "a", 100), (2, "b", 200)], "id long, part string, v long"
-    )
-    merge_upsert(spark, path, base, keys=["id"], partition_by=["part"])
-    # same key appearing twice inside the updates trips the duplicate
-    # guard before anything else
-    moving = spark.createDataFrame(
-        [(1, "a", 101), (1, "b", 102)], "id long, part string, v long"
-    )
-    with pytest.raises(ValueError, match="duplicate merge keys"):
-        merge_upsert(spark, path, moving, keys=["id"], partition_by=["part"])
-    # a key moving partition RELATIVE TO THE TARGET violates the
-    # functional-dependence contract the pruned rewrite relies on
-    moved = spark.createDataFrame(
-        [(1, "b", 104)], "id long, part string, v long"
-    )
-    with pytest.raises(ValueError, match="functionally dependent"):
-        merge_upsert(spark, path, moved, keys=["id"], partition_by=["part"])
-    # partition column inside the keys is always fine
-    ok = spark.createDataFrame(
-        [(1, "a", 103)], "id long, part string, v long"
-    )
-    merge_upsert(spark, path, ok, keys=["id", "part"], partition_by=["part"])
-    got = {r.id: r.v for r in spark.read.parquet(path).filter(F.col("part") == "a").collect()}
-    assert got[1] == 103
-
-
-def test_merge_upsert_null_key_replaced_not_duplicated(spark, tmp_path):
-    from eeg_data_lake_spark.sources.merge import merge_upsert
-
-    path = str(tmp_path / "nk")
-    base = spark.createDataFrame(
-        [(None, "orphan", 1.0), (1, "a", 2.0)], "id long, tag string, v double"
-    )
-    merge_upsert(spark, path, base, keys=["id"])
-    upd = spark.createDataFrame(
-        [(None, "adopted", 9.0)], "id long, tag string, v double"
-    )
-    merge_upsert(spark, path, upd, keys=["id"])
-    rows = {r.id: (r.tag, r.v) for r in spark.read.parquet(path).collect()}
-    assert rows == {None: ("adopted", 9.0), 1: ("a", 2.0)}
-
-
-def test_merge_upsert_duplicate_update_keys_rejected(spark, tmp_path):
-    import pytest
-
-    from eeg_data_lake_spark.sources.merge import merge_upsert
-
-    path = str(tmp_path / "dup")
-    merge_upsert(
-        spark,
-        path,
-        spark.createDataFrame([(1, 1.0)], "id long, v double"),
-        keys=["id"],
-    )
-    with pytest.raises(ValueError, match="duplicate merge keys"):
-        merge_upsert(
-            spark,
-            path,
-            spark.createDataFrame([(1, 2.0), (1, 3.0)], "id long, v double"),
-            keys=["id"],
-        )
-
-
-def test_merge_upsert_recovers_from_crash_between_swaps(spark, tmp_path):
-    """A predecessor that died after moving the table aside but before
-    swapping the staging copy in must be healed on the next call — no
-    crash point may lose committed rows."""
-    import os
-    import shutil
-
-    from eeg_data_lake_spark.sources.merge import merge_upsert
-
-    path = str(tmp_path / "crash")
-    base = spark.createDataFrame(
-        [(1, 1.0), (2, 2.0)], "id long, v double"
-    )
-    merge_upsert(spark, path, base, keys=["id"])
-    # simulate the crash window: table aside, no replacement landed
-    os.replace(path, path + "__retired")
-    assert not os.path.exists(path)
-    merge_upsert(
-        spark,
-        path,
-        spark.createDataFrame([(2, 20.0), (3, 3.0)], "id long, v double"),
-        keys=["id"],
-    )
-    rows = {r.id: r.v for r in spark.read.parquet(path).collect()}
-    assert rows == {1: 1.0, 2: 20.0, 3: 3.0}  # row 1 survived the crash
-    assert not os.path.exists(path + "__retired")
-    assert not os.path.exists(path + "__staging")
-    # leftover staging from a crashed write is also cleared
-    os.makedirs(path + "__staging")
-    merge_upsert(
-        spark,
-        path,
-        spark.createDataFrame([(4, 4.0)], "id long, v double"),
-        keys=["id"],
-    )
-    assert not os.path.exists(path + "__staging")
-    shutil.rmtree(path)
-
-
-def test_merge_upsert_partitioned_leaves_untouched_files_alone(
-    spark, tmp_path
-):
-    """True dynamic partition overwrite: a merge touching partition p1
-    must not read, rewrite, or move p2's files — same inodes after."""
-    import os
-
-    from eeg_data_lake_spark.sources.merge import merge_upsert
-
-    path = str(tmp_path / "dyn")
-    base = spark.createDataFrame(
-        [(1, "p1", 1.0), (2, "p1", 2.0), (3, "p2", 3.0)],
-        "id long, part string, v double",
-    )
-    merge_upsert(spark, path, base, keys=["id"], partition_by=["part"])
-    p2dir = os.path.join(path, "part=p2")
-    before = {
-        f: os.stat(os.path.join(p2dir, f)).st_ino
-        for f in os.listdir(p2dir)
-        if f.endswith(".parquet")
-    }
-    merge_upsert(
-        spark,
-        path,
-        spark.createDataFrame([(2, "p1", 20.0)], "id long, part string, v double"),
-        keys=["id"],
-        partition_by=["part"],
-    )
-    after = {
-        f: os.stat(os.path.join(p2dir, f)).st_ino
-        for f in os.listdir(p2dir)
-        if f.endswith(".parquet")
-    }
-    assert after == before  # byte-for-byte the same files, never moved
-    rows = {r.id: r.v for r in spark.read.parquet(path).collect()}
-    assert rows == {1: 1.0, 2: 20.0, 3: 3.0}
 
 
 def test_orphan_reclaim_requires_provenance_marker(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Right-to-be-forgotten, proven at the FILE level: a merge DELETE
+"""Right-to-be-forgotten, proven at the FILE level: a DELETE WHERE
 removes the subject's rows logically, vacuum removes the rewritten
 files physically, and a raw scan of every byte left on disk (outside
 the engine's read path) finds no trace of the subject — the proof a
@@ -14,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from eeg_data_lake_spark.sources.txlog import TxTable
-from eeg_data_lake_spark.sources.txmerge import merge_into
 
 SUBJECT = 424242
 MARKER = "forget-me-sentinel"
@@ -48,14 +47,7 @@ def _raw_scan_hits(table: TxTable) -> int:
 
 
 def test_logical_delete_alone_leaves_bytes_on_disk(spark, table):
-    merge_into(
-        table,
-        spark.createDataFrame([(SUBJECT,)], "user_id long"),
-        keys=["user_id"],
-        when_matched_update=False,
-        when_matched_delete=lambda t, s: F.lit(True),
-        when_not_matched_insert=False,
-    )
+    table.delete_where([("user_id", "=", SUBJECT)])
     assert table.read().filter(F.col("user_id") == SUBJECT).count() == 0
     # time travel still sees the subject, and the bytes are still there
     assert (
@@ -68,14 +60,7 @@ def test_logical_delete_alone_leaves_bytes_on_disk(spark, table):
 
 
 def test_purge_is_physical_after_vacuum(spark, table):
-    merge_into(
-        table,
-        spark.createDataFrame([(SUBJECT,)], "user_id long"),
-        keys=["user_id"],
-        when_matched_update=False,
-        when_matched_delete=lambda t, s: F.lit(True),
-        when_not_matched_insert=False,
-    )
+    table.delete_where([("user_id", "=", SUBJECT)])
     deleted = table.vacuum(keep_versions=0)
     assert deleted  # the pre-delete files were actually removed
     assert _raw_scan_hits(table) == 0  # no byte of the subject remains
