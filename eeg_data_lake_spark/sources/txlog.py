@@ -60,21 +60,42 @@ O(files touched) — never proportional to table size.
   older rollups or a from-scratch fold (manifests are never deleted),
   and a crash anywhere around the rollup write is harmless — the
   rollup is an accelerator, never the source of truth.
+- **Schema in the log.** Delta's ``metaData`` action: each commit that
+  adds files records the Spark schema of those files (the footer's
+  ``org.apache.spark.sql.parquet.row.metadata`` entry, made nullable
+  as Spark does on read), keyed by commit directory, and every rollup
+  carries the map for the live directories. A plain ``read()`` opens
+  its sorted file list with the schema of the FIRST file — the footer
+  Spark's own inference would serve — so a table open runs no
+  schema-inference job. Commits whose footer entry cannot be
+  reproduced, and logs written before the entry existed, fall back to
+  inference. The open also raises
+  ``spark.sql.sources.parallelPartitionDiscovery.threshold`` above its
+  file count (restored afterwards, under a module lock), so a table
+  past 32 files lists its paths in-process instead of in a Spark
+  job. That is only a good trade on a POSIX filesystem, where a status
+  call per path takes microseconds — which the commit protocol
+  (``os.link``, ``os.listdir``) already requires; on an object store
+  a wide table would want the parallel listing back.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime
+import decimal
 import json
 import operator
 import os
 import re
 import shutil
+import threading
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _OPS = {
     "=": operator.eq,
@@ -141,9 +162,13 @@ def _jsonable(v):
 
     Timestamps/dates serialize to ISO strings (lexicographic order ==
     chronological order, so interval checks still work); bytes decode
-    as UTF-8 where possible, else the stat is dropped for that file."""
+    as UTF-8 where possible, else the stat is dropped for that file.
+    Decimals are dropped too: JSON has no exact form for them, and a
+    rounded bound could prune a file that holds a match."""
     if isinstance(v, (datetime.datetime, datetime.date)):
         return v.isoformat()
+    if isinstance(v, decimal.Decimal):
+        return None
     if isinstance(v, bytes):
         try:
             return v.decode("utf-8")
@@ -184,6 +209,95 @@ def _file_may_match(stats: dict | None, predicates: list[tuple]) -> bool:
     return True
 
 
+#: footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _as_nullable(dt):
+    """A Spark DataType in JSON form, nullable at every level: the
+    ``asNullable`` Spark applies to a file source's schema on read
+    (user-defined types stay as they are, as in Spark)."""
+    if not isinstance(dt, dict):
+        return dt
+    kind = dt.get("type")
+    if kind == "struct":
+        return {
+            **dt,
+            "fields": [
+                {**f, "nullable": True, "type": _as_nullable(f["type"])}
+                for f in dt["fields"]
+            ],
+        }
+    if kind == "array":
+        return {
+            **dt,
+            "containsNull": True,
+            "elementType": _as_nullable(dt["elementType"]),
+        }
+    if kind == "map":
+        return {
+            **dt,
+            "valueContainsNull": True,
+            "keyType": _as_nullable(dt["keyType"]),
+            "valueType": _as_nullable(dt["valueType"]),
+        }
+    return dt
+
+
+def _footer_schema(entry: bytes | None) -> dict | None:
+    """The logged form of one footer's Spark schema entry (nullable
+    JSON), or None when the entry is absent or does not survive a
+    round trip through pyspark's ``StructType`` — opening with it could
+    then serve a different schema than inference would, so such a
+    commit is left to inference."""
+    if entry is None:
+        return None
+    try:
+        schema = _as_nullable(json.loads(entry))
+        if json.loads(StructType.fromJson(schema).json()) == schema:
+            return schema
+    except (ValueError, KeyError, TypeError, AttributeError, ImportError):
+        pass  # legacy non-JSON entry, unknown type, missing UDT class
+    return None
+
+
+def _schema_of(schemas: dict, files: list[str]) -> dict | None:
+    """The logged schema of the sorted-first of ``files``: the footer
+    Spark's inference serves for that list (None when not logged)."""
+    return schemas.get(os.path.dirname(min(files)))
+
+
+def _live_schemas(schemas: dict, files: list[str]) -> dict:
+    dirs = {os.path.dirname(f) for f in files}
+    return {d: s for d, s in schemas.items() if d in dirs}
+
+
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LISTING_LOCK = threading.Lock()
+
+
+@contextlib.contextmanager
+def _local_listing(spark: SparkSession, n_paths: int):
+    """Raise the parallel-listing threshold to ``n_paths`` for one open
+    so its paths are listed in-process, not in a Spark job (POSIX
+    only: see the module docstring). The session's value, or its
+    absence, is restored; the lock keeps concurrent opens from
+    restoring each other's raised value."""
+    with _LISTING_LOCK:
+        prior = spark.conf.get(_LISTING_THRESHOLD, None)
+        if n_paths <= int(prior or spark.conf.get(_LISTING_THRESHOLD)):
+            yield
+            return
+        spark.conf.set(_LISTING_THRESHOLD, str(n_paths))
+        try:
+            yield
+        finally:
+            if prior is None:
+                spark.conf.unset(_LISTING_THRESHOLD)
+            else:
+                spark.conf.set(_LISTING_THRESHOLD, prior)
+
+
 #: commit ops that are pure physical rewrites (row content unchanged)
 #: — invisible to every change-feed surface
 REWRITE_TRANSPARENT_OPS = {"compact", "zorder"}
@@ -222,7 +336,21 @@ def feed_adds_between(
     """The change feed's file actions in ``(since, to]`` — shared by
     TxTable.changes and the txlogcdc streaming source so commit-op
     semantics cannot diverge between the two CDC surfaces."""
-    out: list[tuple[int, list[str]]] = []
+    return [
+        (v, m["add"])
+        for v, m in _feed_manifests(path, since, to, ignore_rewrites, ctx)
+    ]
+
+
+def _feed_manifests(
+    path: str,
+    since: int,
+    to: int,
+    ignore_rewrites: bool,
+    ctx: str,
+) -> list[tuple[int, dict]]:
+    """``feed_adds_between`` with each commit's whole manifest."""
+    out: list[tuple[int, dict]] = []
     for v, mp in iter_manifests(path):
         if v <= since or v > to:
             continue
@@ -257,7 +385,7 @@ def feed_adds_between(
                     "row-level delta for that range no longer exists; "
                     "re-sync from a full read()"
                 )
-            out.append((v, m["add"]))
+            out.append((v, m))
     return out
 
 
@@ -289,6 +417,8 @@ class _LogState:
     files: list[str]  # live data files (relative paths) at `version`
     txn_ids: set[str]  # every txn_id ever committed
     stats: dict[str, dict]  # per live file: {"rows": n, "bytes": b, "cols": {...}}
+    #: per live commit directory: its files' logged Spark schema (JSON)
+    schemas: dict[str, dict] = field(default_factory=dict)
 
 
 #: callbacks invoked with the table PATH after any commit that can
@@ -371,7 +501,11 @@ class TxTable:
             # fold from the manifests instead
             return None
         return _LogState(
-            d["version"], d["files"], set(d["txn_ids"]), d["stats"]
+            d["version"],
+            d["files"],
+            set(d["txn_ids"]),
+            d["stats"],
+            d.get("schemas", {}),  # absent in rollups from older logs
         )
 
     def _write_checkpoint(self, state: _LogState) -> None:
@@ -391,6 +525,7 @@ class TxTable:
                     "files": state.files,
                     "txn_ids": sorted(state.txn_ids),
                     "stats": state.stats,
+                    "schemas": state.schemas,
                 },
                 fh,
             )
@@ -430,9 +565,10 @@ class TxTable:
             files = list(seed.files)
             txns = set(seed.txn_ids)
             stats = dict(seed.stats)
+            schemas = dict(seed.schemas)
             version = seed.version
         else:
-            files, txns, stats = [], set(), {}
+            files, txns, stats, schemas = [], set(), {}, {}
             version = -1
         for v, manifest_path in self._manifests():
             if v <= version:
@@ -447,6 +583,7 @@ class TxTable:
             files = sorted(live)
             stats.update(m.get("stats", {}))
             stats = {f: s for f, s in stats.items() if f in live}
+            schemas.update(m.get("schemas", {}))
             if m.get("txn_id"):
                 txns.add(m["txn_id"])
             version = v
@@ -454,7 +591,9 @@ class TxTable:
             raise ValueError(
                 f"version {upto} does not exist (latest is {version})"
             )
-        return _LogState(version, files, txns, stats)
+        return _LogState(
+            version, files, txns, stats, _live_schemas(schemas, files)
+        )
 
     def _manifests(self):
         yield from iter_manifests(self.path)
@@ -484,18 +623,28 @@ class TxTable:
                     )
         return sorted(out)
 
-    def _file_stats(self, relpaths: list[str]) -> dict[str, dict]:
-        """Per-file row/byte counts and column min/max/null_count, read
-        from the parquet footers the writer already produced (metadata
-        only — no data pages touched). Nested/list columns and columns
-        whose row groups lack statistics are simply omitted: skipping
-        treats a missing entry as "might match"."""
+    def _read_footers(
+        self, relpaths: list[str]
+    ) -> tuple[dict[str, dict], dict[str, dict]]:
+        """Per-file row/byte counts and column min/max/null_count, and
+        per-directory Spark schemas, read from the parquet footers the
+        writer already produced (metadata only — no data pages
+        touched). Nested/list columns and columns whose row groups
+        lack statistics are simply omitted: skipping treats a missing
+        entry as "might match". A directory whose files disagree on
+        the schema entry gets none (its reads fall back to
+        inference)."""
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         out: dict[str, dict] = {}
+        entries: dict[str, set] = {}
         for rel in relpaths:
             full = os.path.join(self.path, rel)
             md = pq.ParquetFile(full).metadata
+            entries.setdefault(os.path.dirname(rel), set()).add(
+                (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+            )
             cols: dict[str, dict] = {}
             per_col: dict[str, dict] = {}
             for rg in range(md.num_row_groups):
@@ -512,9 +661,14 @@ class TxTable:
                     if st is None or not st.has_min_max:
                         entry["ok"] = False
                         continue
+                    try:
+                        bounds = {"min": st.min, "max": st.max}
+                    except pa.ArrowNotImplementedError:
+                        entry["ok"] = False  # a type pyarrow cannot decode
+                        continue
                     entry["null_count"] += st.null_count or 0
                     for key, pick in (("min", min), ("max", max)):
-                        v = getattr(st, key)
+                        v = bounds[key]
                         cur = entry[key]
                         entry[key] = v if cur is None else pick(cur, v)
             for name, entry in per_col.items():
@@ -533,7 +687,12 @@ class TxTable:
                 "bytes": os.path.getsize(full),
                 "cols": cols,
             }
-        return out
+        schemas = {
+            d: _footer_schema(next(iter(es)))
+            for d, es in entries.items()
+            if len(es) == 1
+        }
+        return out, {d: s for d, s in schemas.items() if s is not None}
 
     def _commit(
         self,
@@ -558,7 +717,7 @@ class TxTable:
         hundreds of competing commits starved this one — surfacing
         that as ConcurrentModificationError beats spinning forever on
         a pathologically contended table."""
-        stats = self._file_stats(add)
+        stats, schemas = self._read_footers(add)
         for _attempt in range(self.COMMIT_RETRIES):
             state = self._replay()
             if txn_id and txn_id in state.txn_ids:
@@ -584,6 +743,7 @@ class TxTable:
                         "remove": remove,
                         "txn_id": txn_id,
                         "stats": stats,
+                        "schemas": schemas,
                         # wall-clock commit time: metadata only (no
                         # reader derives data from it) → additive and
                         # replay-safe; powers table_history/freshness
@@ -625,6 +785,9 @@ class TxTable:
                                     for f, s in new_stats.items()
                                     if f in live
                                 },
+                                _live_schemas(
+                                    {**state.schemas, **schemas}, live
+                                ),
                             )
                         )
                     except Exception:
@@ -650,9 +813,26 @@ class TxTable:
         under the same merge-on-read rules ``read(merge_schema=True)``
         applies (and strictly safer for plain readers: the rewritten
         region becomes schema-uniform)."""
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.path, f) for f in relpaths]
-        )
+        return self._open(relpaths, merge=True)
+
+    def _open(
+        self,
+        files: list[str],
+        schema: dict | None = None,
+        merge: bool = False,
+    ) -> DataFrame:
+        """Open ``files`` (relative paths) with a logged ``schema``, or
+        with Spark's inference when there is none (``mergeSchema``
+        with ``merge``), listing the paths in-process."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        elif merge:
+            reader = reader.option("mergeSchema", "true")
+        with _local_listing(self.spark, len(files)):
+            return reader.parquet(
+                *[os.path.join(self.path, f) for f in files]
+            )
 
     # ------------------------------------------------------------- ops
 
@@ -772,7 +952,12 @@ class TxTable:
         ``merge_schema=True`` reconciles files written with different
         (compatible) schemas — columns absent from older files read as
         null, Delta's additive schema evolution. Off by default: the
-        union costs a footer read per file at planning time."""
+        union costs a footer read per file at planning time.
+
+        Otherwise the open uses the schema the log records for the
+        first of the files it reads — the footer Spark would infer
+        from — and launches no Spark job (module docstring, "Schema in
+        the log")."""
         state = self._replay(upto=version)
         if not state.files:
             raise ValueError(f"table at {self.path} has no data")
@@ -789,23 +974,18 @@ class TxTable:
                 # evolution one file's footer may lack columns newer
                 # files carry, and an empty frame missing them would
                 # fail downstream selects only on this data-dependent
-                # path
+                # path. With a logged schema no file is opened: the
+                # always-false filter plans to an empty relation.
                 if merge_schema:
-                    schema_df = self.spark.read.option(
-                        "mergeSchema", "true"
-                    ).parquet(
-                        *[os.path.join(self.path, f) for f in state.files]
-                    )
+                    schema_df = self._open(state.files, merge=True)
                 else:
-                    schema_df = self.spark.read.parquet(
-                        os.path.join(self.path, state.files[0])
+                    schema_df = self._open(
+                        state.files[:1],
+                        _schema_of(state.schemas, state.files),
                     )
                 return schema_df.where("1 = 0")
-        paths = [os.path.join(self.path, f) for f in files]
-        reader = self.spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*paths)
+        schema = None if merge_schema else _schema_of(state.schemas, files)
+        df = self._open(files, schema, merge_schema)
         for col, op, value in predicates or []:
             df = df.where(_OPS[op](F.col(col), F.lit(value)))
         return df
@@ -916,23 +1096,24 @@ class TxTable:
             raise ValueError(
                 f"version {to} does not exist (latest is {state.version})"
             )
-        adds = feed_adds_between(
+        commits = _feed_manifests(
             self.path, since, hi, ignore_rewrites, f"changes({since}, {hi})"
         )
-        if not adds:
+        if not commits:
             if not state.files:
                 raise ValueError(f"table at {self.path} has no data")
-            schema_df = self.spark.read.parquet(
-                os.path.join(self.path, state.files[0])
+            schema_df = self._open(
+                state.files[:1], _schema_of(state.schemas, state.files)
             )
             return schema_df.withColumn(
                 "_commit_version", F.lit(0).cast("long")
             ).where("1 = 0")
+        # each commit's files open with that commit's logged schema
         parts = [
-            self.spark.read.parquet(
-                *[os.path.join(self.path, f) for f in files]
+            self._open(
+                m["add"], _schema_of(m.get("schemas", {}), m["add"])
             ).withColumn("_commit_version", F.lit(v).cast("long"))
-            for v, files in adds
+            for v, m in commits
         ]
         out = parts[0]
         for p in parts[1:]:

@@ -55,14 +55,14 @@ from eeg_data_lake_spark.sources.txlog import TxTable
 
 
 #: per-table contract schema, keyed by table path. The full
-#: TxTable.read() a cold gate pays (txlog replay + parquet footer
-#: read) would otherwise run once per LEG per TRIGGER — driver latency
-#: that grows with the corpus's file count on a long-lived stream.
+#: TxTable.read() a cold gate pays (txlog replay + DataFrame open)
+#: would otherwise run once per LEG per TRIGGER — latency that
+#: grows with the log's tail on a long-lived stream.
 #: Sound to cache per process: within one stream the only schema
 #: changes flow through this gate's own passing appends (merged into
 #: the cache below); a concurrent writer evolving the table from
 #: elsewhere was already outside the gate's best-effort contract (the
-#: "old" schema is one footer either way).
+#: "old" schema is one commit's either way).
 _CONTRACT_SCHEMAS: dict[str, object] = {}
 
 
@@ -123,10 +123,12 @@ def contract_gate(target: TxTable, df: DataFrame):
     append subsequently failed, falsely refusing later legitimate
     batches until process restart (round-8 ADVICE).
 
-    Best-effort under additive evolution: the "old" schema is the
-    footer TxTable.read() serves (one file), which may predate later
-    additive columns — the gate then misses a drop of such a column
-    but never falsely refuses. A table with no rows yet gates nothing
+    Best-effort under additive evolution: the "old" schema is the one
+    TxTable.read() serves — the schema the txlog records for the
+    commit of the table's first live file (its footer's, read by
+    inference for logs that predate the record) — which may predate
+    later additive columns; the gate then misses a drop of such a
+    column but never falsely refuses. A table with no rows yet gates nothing
     (first write defines the contract). A table REWRITTEN with a
     different schema at the same path needs ``invalidate_contract``."""
     old = _CONTRACT_SCHEMAS.get(target.path)

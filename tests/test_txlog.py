@@ -634,3 +634,273 @@ def test_commit_retry_budget_is_bounded(spark, tmp_path, monkeypatch):
     with pytest.raises(ConcurrentModificationError, match="contended"):
         t.append(spark.createDataFrame([(1,)], "x long"))
     assert len(attempts) == 3
+
+
+# ------------------------------------------------------ schema in the log
+
+
+def _rows(df):
+    return sorted(df.toJSON().collect())
+
+
+def _commit_dirs_sort(monkeypatch, newest_first: bool) -> None:
+    """Name commit directories so they sort in commit order, or in
+    reverse: the schema a multi-file read serves is the sorted-first
+    file's, and random names would make that a coin toss."""
+    import uuid
+
+    from eeg_data_lake_spark.sources import txlog
+
+    calls = iter(range(1, 1 << 20))
+
+    def ordered():
+        k = next(calls)
+        return uuid.UUID(int=((1 << 40) - k if newest_first else k) << 80)
+
+    monkeypatch.setattr(txlog.uuid, "uuid4", ordered)
+
+
+def _evolved(spark, t):
+    t.append(spark.createDataFrame([(1, "a")], "id long, v string"))
+    t.append(
+        spark.createDataFrame([(2, "b", 0.5)], "id long, v string, score double")
+    )
+    return t.read(), None
+
+
+def _case_nested(spark, t, monkeypatch):
+    t.append(
+        spark.sql(
+            "SELECT id, named_struct('a', id, 'b', array(id, id + 1)) AS s, "
+            "map(CAST(id AS string), array(id)) AS m, "
+            "array(named_struct('x', id, 'y', map('k', id))) AS arr "
+            "FROM range(5)"
+        )
+    )
+    return t.read(), None
+
+
+def _case_scalars(spark, t, monkeypatch):
+    t.append(
+        spark.sql(
+            "SELECT id, CAST(id / 7 AS decimal(12, 3)) AS d, "
+            "timestamp_micros(1700000000123456 + id) AS ts, "
+            "TIMESTAMP_NTZ '2024-03-01 10:00:00.654321' AS ntz, "
+            "CAST(CAST(id AS string) AS binary) AS b FROM range(5)"
+        )
+    )
+    return t.read(), None
+
+
+def _case_not_null(spark, t, monkeypatch):
+    df = spark.range(5).select("id", F.array("id").alias("a"))
+    assert not df.schema["id"].nullable
+    t.append(df)
+    return t.read(), None
+
+
+def _case_evolved_older_first(spark, t, monkeypatch):
+    _commit_dirs_sort(monkeypatch, newest_first=False)
+    return _evolved(spark, t)
+
+
+def _case_evolved_newer_first(spark, t, monkeypatch):
+    _commit_dirs_sort(monkeypatch, newest_first=True)
+    return _evolved(spark, t)
+
+
+def _case_upsert_widening(spark, t, monkeypatch):
+    t.append(spark.createDataFrame([(1, 10), (2, 20)], "id long, n int"))
+    t.upsert(spark.createDataFrame([(2, 1 << 40)], "id long, n long"), ["id"])
+    df = t.read()
+    assert dict(df.dtypes)["n"] == "bigint"
+    return df, None
+
+
+def _case_compact(spark, t, monkeypatch):
+    _commit_dirs_sort(monkeypatch, newest_first=True)
+    for i in range(3):
+        t.append(spark.createDataFrame([(i, str(i))], "id long, v string"))
+    t.append(
+        spark.createDataFrame([(9, "z", 1.5)], "id long, v string, score double")
+    )
+    t.compact()
+    return t.read(), None
+
+
+def _case_overwrite_new_schema(spark, t, monkeypatch):
+    t.append(spark.createDataFrame([(1, "a")], "id long, v string"))
+    t.overwrite(spark.createDataFrame([("k", 2.5)], "key string, x double"))
+    df = t.read()
+    assert df.columns == ["key", "x"]
+    return df, None
+
+
+def _case_time_travel(spark, t, monkeypatch):
+    t.append(spark.createDataFrame([(1, "a")], "id long, v string"))
+    t.overwrite(spark.createDataFrame([("k", 2.5)], "key string, x double"))
+    return t.read(version=0), t._replay(upto=0).files
+
+
+def _case_pruned(spark, t, monkeypatch):
+    _commit_dirs_sort(monkeypatch, newest_first=False)
+    t.append(spark.range(0, 10).selectExpr("id", "CAST(id AS string) AS v"))
+    t.append(
+        spark.range(100, 110).selectExpr(
+            "id", "CAST(id AS string) AS v", "CAST(id AS double) AS score"
+        )
+    )
+    preds = [("id", ">=", 100)]
+    files = t.matching_files(preds)
+    assert 0 < len(files) < len(t._replay().files)
+    return t.read(predicates=preds), files
+
+
+def _case_forty_files(spark, t, monkeypatch):
+    t.append(spark.range(400).selectExpr("id", "id % 3 AS k").repartition(40))
+    assert len(t._replay().files) == 40
+    return t.read(), None
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        _case_nested,
+        _case_scalars,
+        _case_not_null,
+        _case_evolved_older_first,
+        _case_evolved_newer_first,
+        _case_upsert_widening,
+        _case_compact,
+        _case_overwrite_new_schema,
+        _case_time_travel,
+        _case_pruned,
+        _case_forty_files,
+    ],
+    ids=lambda c: c.__name__[len("_case_"):],
+)
+def test_read_serves_the_schema_spark_would_infer(
+    spark, tmp_path, monkeypatch, case
+):
+    """A read opened with the logged schema serves exactly the schema
+    and rows Spark's own inference serves for the same live files."""
+    from eeg_data_lake_spark.sources.txlog import iter_manifests
+
+    t = TxTable(spark, str(tmp_path / "s"))
+    got, files = case(spark, t, monkeypatch)
+    files = files or t._replay().files
+    logged = {}
+    for _v, mp in iter_manifests(t.path):
+        with open(mp) as fh:
+            logged.update(json.load(fh)["schemas"])
+    assert os.path.dirname(min(files)) in logged  # not the fallback
+    want = spark.read.parquet(*[os.path.join(t.path, f) for f in files])
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs that ``fn`` launches from the calling thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"txlog-open-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "txlog open")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture()
+def forty(spark, tmp_path):
+    t = TxTable(spark, str(tmp_path / "forty"))
+    t.append(spark.range(400).selectExpr("id", "id % 7 AS k").repartition(40))
+    assert len(t._replay().files) == 40
+    return t
+
+
+def test_open_launches_no_spark_job(spark, forty):
+    """Past 32 paths an inferred open costs a footer job and a listing
+    job; the logged schema and the in-process listing cost none."""
+    assert _jobs_launched(spark, forty.read) == 0
+    assert _jobs_launched(spark, lambda: forty.changes(-1)) == 0
+    assert (
+        _jobs_launched(spark, lambda: forty.read(predicates=[("id", ">", 9999)]))
+        == 0
+    )
+
+
+@pytest.mark.parametrize("explicit", [None, "7"])
+def test_concurrent_opens_restore_the_listing_threshold(
+    spark, forty, explicit
+):
+    """Eight threads opening at once leave the session's listing
+    threshold as it was, whether the session set one or not."""
+    import sys
+    import threading
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    if explicit is not None:
+        spark.conf.set(key, explicit)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        counts, errors = [], []
+
+        def open_once():
+            try:
+                counts.append(_jobs_launched(spark, forty.read))
+            except Exception as e:  # pragma: no cover - failure reporting
+                errors.append(repr(e))
+
+        threads = [threading.Thread(target=open_once) for _ in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+            assert not th.is_alive()
+        assert not errors
+        assert counts == [0] * 8
+        assert spark.conf.get(key, None) == explicit
+    finally:
+        sys.setswitchinterval(switch)
+        spark.conf.unset(key)
+
+
+def test_log_without_schemas_reads_by_inference(spark, tmp_path):
+    """A log from before schemas were recorded (no ``schemas`` in its
+    manifests or rollup) reads the same schema and rows, and the next
+    commit records a schema again."""
+    t = TxTable(spark, str(tmp_path / "old"))
+    t.CHECKPOINT_INTERVAL = 2
+    for i in range(3):
+        t.append(spark.createDataFrame([(i, str(i))], "id long, v string"))
+    t.append(
+        spark.createDataFrame([(7, "x", 0.5)], "id long, v string, score double")
+    )
+    want_schema, want_rows = t.read().schema, _rows(t.read())
+    for n in os.listdir(t.log_dir):
+        p = os.path.join(t.log_dir, n)
+        with open(p) as fh:
+            d = json.load(fh)
+        assert d.pop("schemas")
+        with open(p, "w") as fh:
+            json.dump(d, fh)
+    assert t._replay().schemas == {}
+    old = t.read()
+    assert old.schema == want_schema and _rows(old) == want_rows
+    files = t._replay().files
+    assert old.schema == spark.read.parquet(
+        *[os.path.join(t.path, f) for f in files]
+    ).schema
+    v = t.append(spark.createDataFrame([(8, "y")], "id long, v string"))
+    with open(os.path.join(t.log_dir, f"{v:08d}.json")) as fh:
+        assert json.load(fh)["schemas"]
+    new_dirs = {os.path.dirname(f) for f in t._replay().files} - {
+        os.path.dirname(f) for f in files
+    }
+    assert set(t._replay().schemas) == new_dirs
