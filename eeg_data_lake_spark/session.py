@@ -22,6 +22,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: ``spark.sql.codegen.cache.maxEntries`` (see get_spark)
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_spark(
     app_name: str = "eeg-data-lake-spark",
@@ -64,6 +67,17 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # generated-class cache (static: it must be set before the
+        # session exists). The default 100 thrashes: the 37 headline
+        # queries need about 507 classes, so every warm pass recompiled
+        # about 570. Sweep on perfbench lake_queries (seed 1, 2 runs
+        # each, 4-core host): query_p50_s 0.248/0.274 s at the default,
+        # 0.200/0.218 at 256, 0.166/0.157 at 1024, 0.169/0.164 at 4096;
+        # peak_rss_mb 1842/1851, 1894/1894, 1866/1882, 1872/1870.
+        # 1024 and 4096 tie there; 4096 also holds the 3,320 classes one
+        # pass over the whole 233-query registry compiles at sf0.001, so
+        # a session running all of it (the test suite) reuses them too.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.parquet.filterPushdown", "true")
         # Python DataSource filter pushdown (sources/eegsynth.py):
         # required for pushFilters to be called at planning time; Spark

@@ -14,6 +14,9 @@ whole-stage-codegen hostile and undefined after joins.
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -106,30 +109,69 @@ def read_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the same ns→µs truncation DuckDB applies, so oracle comparisons
     agree. Footer sniffing happens once on the driver; the conversion
     itself is a columnar expression.
+
+    The footer sniff and Spark's schema inference (one job) run once
+    per table file: the ns columns and the raw schema are cached under
+    (path, st_mtime_ns, st_size, the session's parquet inference confs
+    ``binaryAsString``, ``int96AsTimestamp`` and
+    ``inferTimestampNTZ.enabled``), and a hit opens the file with that
+    schema. Every execution still scans the data. Only a regular file is
+    cached: a directory's mtime does not change when a part file inside
+    it is rewritten, so a directory keeps inference on every call.
     """
-    path = f"{sf_dir}/{name}.parquet"
-    ns_cols = _nanos_timestamp_cols(path)
+    ns_cols, df = _read_raw(spark, f"{sf_dir}/{name}.parquet")
+    for c in ns_cols:
+        # integer `div`: epoch-nanos ≈ 1.7e18 overflows double precision
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    return _ntz_to_timestamp(spark, df)
+
+
+#: session confs that change the schema Spark infers from a footer
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+#: (path, mtime ns, size, *_INFERENCE_CONFS values) → (ns cols, raw
+#: schema). Process-wide, as the key names everything the value depends
+#: on; two threads that miss together only infer the same value twice.
+_SCHEMA_CACHE: dict[tuple, tuple[list[str], T.StructType]] = {}
+
+
+def _read_raw(spark: SparkSession, path: str) -> tuple[list[str], DataFrame]:
+    """The table file as stored (ns columns as LongType, NTZ as NTZ) and
+    its ns columns, from the schema cache when the file is unchanged."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None  # let Spark raise its own path error
+    key = None
+    if st is not None and stat.S_ISREG(st.st_mode):
+        key = (path, st.st_mtime_ns, st.st_size,
+               *(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    hit = _SCHEMA_CACHE.get(key) if key else None
+    ns_cols = hit[0] if hit else _nanos_timestamp_cols(path)
+    reader = spark.read.schema(hit[1]) if hit else spark.read
     if ns_cols:
         # scope the legacy conf to THIS read (schema conversion happens
         # eagerly at spark.read.parquet): left set session-wide, every
         # later unrelated parquet read would silently decode
         # TIMESTAMP(NANOS) as raw bigint nanos instead of failing loudly
-        key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "true")
+        conf = "spark.sql.legacy.parquet.nanosAsLong"
+        prev = spark.conf.get(conf, None)
+        spark.conf.set(conf, "true")
         try:
-            df = spark.read.parquet(path)
+            df = reader.parquet(path)
         finally:
             if prev is None:
-                spark.conf.unset(key)
+                spark.conf.unset(conf)
             else:
-                spark.conf.set(key, prev)
+                spark.conf.set(conf, prev)
     else:
-        df = spark.read.parquet(path)
-    for c in ns_cols:
-        # integer `div`: epoch-nanos ≈ 1.7e18 overflows double precision
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return _ntz_to_timestamp(spark, df)
+        df = reader.parquet(path)
+    if key and not hit:
+        _SCHEMA_CACHE[key] = (ns_cols, df.schema)
+    return ns_cols, df
 
 
 def _ntz_to_timestamp(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -162,8 +204,7 @@ def read_testdata_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFra
     nanosAsLong read) and rebuilt as µs timestamps, same as the batch
     reader.
     """
-    path = f"{sf_dir}/{name}.parquet"
-    ns_cols = set(_nanos_timestamp_cols(path))
+    ns_cols, raw = _read_raw(spark, f"{sf_dir}/{name}.parquet")
     if ns_cols:
         # deliberately NOT restored here (unlike the batch reader): the
         # stream decodes files on every micro-batch for its whole
@@ -173,9 +214,8 @@ def read_testdata_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFra
     # the stream scan decodes exactly what's on disk, then rebuild the
     # canonical TIMESTAMP columns with the same expressions as the batch
     # reader — watermarks reject NTZ event-time columns.
-    stream_schema = spark.read.parquet(path).schema
     df = (
-        spark.readStream.schema(stream_schema)
+        spark.readStream.schema(raw.schema)
         .option("pathGlobFilter", f"{name}.parquet")
         .parquet(sf_dir)
     )
@@ -186,7 +226,6 @@ def read_testdata_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFra
 
 def _nanos_timestamp_cols(path: str) -> list[str]:
     import glob
-    import os
     import warnings
 
     import pyarrow.parquet as pq

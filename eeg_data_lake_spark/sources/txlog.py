@@ -64,10 +64,11 @@ O(files touched) — never proportional to table size.
   adds files records the Spark schema of those files (the footer's
   ``org.apache.spark.sql.parquet.row.metadata`` entry, made nullable
   as Spark does on read), keyed by commit directory, and every rollup
-  carries the map for the live directories. A plain ``read()`` opens
-  its sorted file list with the schema of the FIRST file — the footer
-  Spark's own inference would serve — so a table open runs no
-  schema-inference job. Commits whose footer entry cannot be
+  carries the map for the live directories, storing each distinct
+  schema once and each directory as an index into that list. A plain
+  ``read()`` opens its sorted file list with the schema of the FIRST
+  file — the footer Spark's own inference would serve — so a table
+  open runs no schema-inference job. Commits whose footer entry cannot be
   reproduced, and logs written before the entry existed, fall back to
   inference. The open also raises
   ``spark.sql.sources.parallelPartitionDiscovery.threshold`` above its
@@ -500,12 +501,19 @@ class TxTable:
             # pruned between listing and open (concurrent writer) —
             # fold from the manifests instead
             return None
+        # "schemas" maps each live directory to an index into the
+        # rollup's distinct "schema_list"; older rollups map it to the
+        # schema itself, and the oldest have no "schemas" at all
+        shared = d.get("schema_list", [])
         return _LogState(
             d["version"],
             d["files"],
             set(d["txn_ids"]),
             d["stats"],
-            d.get("schemas", {}),  # absent in rollups from older logs
+            {
+                k: shared[s] if isinstance(s, int) else s
+                for k, s in d.get("schemas", {}).items()
+            },
         )
 
     def _write_checkpoint(self, state: _LogState) -> None:
@@ -518,6 +526,12 @@ class TxTable:
         tmp = os.path.join(
             self.log_dir, f".ckpt-tmp-{uuid.uuid4().hex[:12]}"
         )
+        # each distinct schema once: a table's live directories almost
+        # always share one schema
+        shared: list[dict] = []
+        for s in state.schemas.values():
+            if s not in shared:
+                shared.append(s)
         with open(tmp, "w") as fh:
             json.dump(
                 {
@@ -525,7 +539,10 @@ class TxTable:
                     "files": state.files,
                     "txn_ids": sorted(state.txn_ids),
                     "stats": state.stats,
-                    "schemas": state.schemas,
+                    "schema_list": shared,
+                    "schemas": {
+                        d: shared.index(s) for d, s in state.schemas.items()
+                    },
                 },
                 fh,
             )
