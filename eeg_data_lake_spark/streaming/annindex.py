@@ -38,11 +38,11 @@ generation's own centroids — an in-flight probe is always consistent
 with the assignment that placed the rows, never a mix of new
 centroids against old cells. Exactly-once across both tables via the
 streaming/txpair.py corpus-first discipline. At scale, generations
-are the IVF analog of LSM segments: a compaction that re-assigns old
+are the IVF analog of LSM segments: probe fan-out grows with their
+count, and bounding it would take a compaction that re-assigns old
 generations under the newest set (the FAISS "retrain = rebuild",
-amortized) bounds probe fan-out; ``count_cap`` bounds history so the
-quantizer keeps tracking under sustained drift instead of freezing as
-counts grow.
+amortized); ``count_cap`` bounds history so the quantizer keeps
+tracking under sustained drift instead of freezing as counts grow.
 """
 
 from __future__ import annotations
@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eeg_data_lake_spark.sources.txlog import TxTable
-from eeg_data_lake_spark.streaming.txpair import paired_commit
+from eeg_data_lake_spark.streaming.txpair import drain, paired_commit
 from eeg_data_lake_spark.workload.similarity import as_double, dot, l2norm
 
 
@@ -237,82 +237,14 @@ def adaptive_index_batch_writer(
                 ]
                 return spark.createDataFrame(rows, CENTROID_SCHEMA)
 
-            # the cset derivation reads the batch (`indexed`) and
-            # the PRE-batch centroid set only -> safe to overlap
             paired_commit(
                 table, clustered, ctable, new_set_df,
                 sink_id, "cset", batch_id,
-                stage_concurrently=True,
             )
         finally:
             indexed.unpersist()
 
     return process
-
-
-def compact_generations(table: TxTable, n_files: int = 16) -> int:
-    """LSM-style generation compaction — the bound on
-    ``probe_topk_adaptive``'s O(generations * nprobe) fan-out: re-assign
-    EVERY corpus row under the newest centroid set (one full-corpus
-    narrow map + the same range-clustered write a batch gets) and
-    collapse the quantizer history to that single set. This is FAISS's
-    "retrain = rebuild" amortized online: run it when the generation
-    count has grown past taste (with the txlog's own compact/vacuum
-    cadence), and probes drop from per-generation unions back to
-    nprobe file reads.
-
-    Crash ordering mirrors the ingest discipline — corpus first, then
-    the quantizer table: between the two commits every corpus row
-    already carries the newest cset, so per-generation probes of the
-    still-listed OLD sets prune to zero files and results stay
-    correct; re-running completes the second leg (both legs carry
-    cset-keyed txn ids, so a replay skips what already landed).
-
-    Safe under concurrent ingest: both overwrites are PINNED to the
-    snapshot version their content was derived from
-    (``TxTable.overwrite(pin_version=...)``), so a batch that commits
-    between the read and the overwrite keeps its corpus file and its
-    centroid set — the compaction replaces exactly what it read,
-    never what landed after. Returns the corpus version after
-    compaction."""
-    ctable = centroid_table(table.spark, table)
-    cv = ctable.version()
-    # the bounded two-read pattern (latest_centroid_set), version-
-    # pinned: only the newest set's k rows reach the driver — a
-    # full-history collect would scale with generation count exactly
-    # when compaction is needed most
-    cs = int(
-        ctable.read(version=cv).agg(F.max("cset")).collect()[0][0]
-    )
-    sets = _sets_from_rows(
-        ctable.read(version=cv, predicates=[("cset", "=", cs)]).collect()
-    )
-    cents, counts = sets[cs]
-    v = table.version()
-    if v >= 0 and not table.has_txn(f"gen-compact-{cs}"):
-        reassigned = table.read(version=v).select(
-            "vec_id",
-            "embedding",
-            cell_of(as_double(F.col("embedding")), cents).alias("cell"),
-            F.lit(cs).cast("int").alias("cset"),
-        )
-        clustered = reassigned.repartitionByRange(
-            n_files, "cell"
-        ).sortWithinPartitions("cell")
-        table.overwrite(
-            clustered, txn_id=f"gen-compact-{cs}", pin_version=v
-        )
-    if not ctable.has_txn(f"gen-compact-cset-{cs}"):
-        rows = [
-            (cs, i, [float(x) for x in cents[i]], int(counts[i]))
-            for i in range(len(cents))
-        ]
-        ctable.overwrite(
-            table.spark.createDataFrame(rows, CENTROID_SCHEMA),
-            txn_id=f"gen-compact-cset-{cs}",
-            pin_version=cv,
-        )
-    return table.version()
 
 
 def stream_ann_ingest(
@@ -329,8 +261,7 @@ def stream_ann_ingest(
     max_files_per_trigger: int = 1,
 ) -> None:
     """Drain a file-source vector stream into the IVF index
-    (AvailableNow; re-invocations resume from the checkpoint and
-    replayed batches are no-ops). ``adaptive=True`` uses the
+    (``txpair.drain``). ``adaptive=True`` uses the
     centroid-refreshing writer — the quantizer table must already hold
     set 0 (``init_centroid_set``); otherwise ``cents`` fixes the
     quantizer for the index's lifetime."""
@@ -342,16 +273,10 @@ def stream_ann_ingest(
         if cents is None:
             raise ValueError("fixed-quantizer ingest requires cents")
         writer = index_batch_writer(table, cents, sink_id, n_files=n_files)
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(writer)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark, source_dir, schema, writer, checkpoint_path,
+        max_files_per_trigger,
     )
-    q.awaitTermination()
 
 
 def probe_topk_adaptive(
@@ -365,8 +290,7 @@ def probe_topk_adaptive(
     cells against the query and read its top-``nprobe`` cells'
     files — probes stay consistent with the assignments that placed
     the rows. Exact cosine inside the probed union. Probe fan-out is
-    O(generations * nprobe); compaction (re-assign old generations
-    under the newest set) is the bound at scale."""
+    O(generations * nprobe)."""
     ctable = centroid_table(table.spark, table)
     if table.version() < 0:
         # quantizer initialized but no batch landed yet: an empty

@@ -29,10 +29,10 @@ At 100 TB: per batch the chunker is a narrow Arrow-batched map
 novelty anti-join probes the index on the 16-byte chunk hash —
 O(batch chunks) against an index with one row per UNIQUE chunk, never
 payload bytes. The index side of that anti-join grows with the LAKE,
-so ``bucketize_chunk_index`` materializes it as a projection bucketed
-on chunk_md5 and the probe then reads the base co-located — zero
-index-side exchange per trigger, only the post-projection tail
-shuffling (sources/indexproj.py; plan pinned in
+so sources/indexproj.bucketize_index materializes it as a projection
+bucketed on ``CHUNK_KEYS`` and the probe then reads the base
+co-located — zero index-side exchange per trigger, only the
+post-projection tail shuffling (sources/indexproj.py; plan pinned in
 tests/test_indexproj.py).
 
 Reference capability upgraded: the reference dedups whole files by
@@ -46,13 +46,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eeg_data_lake_spark.functions.chunking import chunk_rows
-from eeg_data_lake_spark.sources.indexproj import (
-    bucketize_index,
-    compact_index,
-    index_frames,
-)
+from eeg_data_lake_spark.sources.indexproj import index_frames
 from eeg_data_lake_spark.sources.txlog import TxTable
-from eeg_data_lake_spark.streaming.txpair import backfill_index, paired_commit
+from eeg_data_lake_spark.streaming.txpair import (
+    backfill_index,
+    drain,
+    paired_commit,
+)
 
 
 def chunk_index_table(spark: SparkSession, table: TxTable) -> TxTable:
@@ -63,46 +63,9 @@ def chunk_index_table(spark: SparkSession, table: TxTable) -> TxTable:
     return TxTable(spark, table.path + "_chunks")
 
 
-def bucketize_chunk_index(
-    table: TxTable, base: str, n_buckets: int = 32
-) -> str:
-    """Materialize the chunk index as a catalog table bucketed+sorted
-    on chunk_md5 (sources/indexproj.py). Pass the same ``base`` to the
-    writer and every later batch's novelty probe reads the index base
-    co-located — bucket i vs bucket i, zero index-side exchange — plus
-    only the small post-projection tail. Cadence: at compaction, when
-    the index files get rewritten anyway."""
-    return bucketize_index(
-        chunk_index_table(table.spark, table), base, ["chunk_md5"], n_buckets
-    )
-
-
-def compact_chunk_index(
-    table: TxTable,
-    base: str | None,
-    n_buckets: int = 32,
-    max_small_files: int = 8,
-    target_file_bytes: int = 128 << 20,
-    small_file_bytes: int | None = None,
-    vacuum_keep_versions: int | None = None,
-    max_projection_files: int | None = None,
-) -> str | None:
-    """Post-ingest maintenance: policy-compact the chunk index and,
-    when compaction ran under a live ``base`` projection, re-bucketize
-    it BEFORE any vacuum so the next trigger's probe keeps its
-    zero-exchange co-location instead of silently degrading to the
-    full read (sources/indexproj.compact_index)."""
-    return compact_index(
-        chunk_index_table(table.spark, table),
-        base,
-        ["chunk_md5"],
-        n_buckets=n_buckets,
-        max_small_files=max_small_files,
-        target_file_bytes=target_file_bytes,
-        small_file_bytes=small_file_bytes,
-        vacuum_keep_versions=vacuum_keep_versions,
-        max_projection_files=max_projection_files,
-    )
+#: the chunk index's probe key: pass with ``chunk_index_table(...)``
+#: to sources/indexproj.bucketize_index / compact_index
+CHUNK_KEYS = ("chunk_md5",)
 
 
 def novel_against(batch_chunks: DataFrame, frames) -> DataFrame:
@@ -127,7 +90,7 @@ def chunk_batch_writer(
     """foreachBatch function: append the batch to the corpus, then
     append only the chunks the lake has never stored (see module
     docstring for the crash-safety argument). ``bucketed_base`` names
-    a ``bucketize_chunk_index`` projection: the novelty probe then
+    a projection bucketed on ``CHUNK_KEYS``: the novelty probe then
     reads the index base co-located (no index-side shuffle per
     trigger) plus the post-projection txlog tail."""
 
@@ -193,8 +156,6 @@ def chunk_batch_writer(
             novel = novel_against(
                 batch_chunks, index_frames(idx, bucketed_base)
             )
-            # legs derive from the batch and the index frames
-            # captured above -> safe to overlap the data writes
             paired_commit(
                 table,
                 batch_df,
@@ -208,7 +169,6 @@ def chunk_batch_writer(
                 sink_id,
                 "chunks",
                 batch_id,
-                stage_concurrently=True,
             )
         finally:
             # a failed/retried micro-batch must not strand the persisted
@@ -227,36 +187,17 @@ def stream_chunk_ingest(
     sink_id: str,
     max_files_per_trigger: int = 1,
     bucketed_base: str | None = None,
-    maintain: bool = False,
-    vacuum_keep_versions: int | None = None,
 ) -> None:
     """Drain a file-source blob stream into the corpus + chunk store
-    (AvailableNow; re-invocations resume from the checkpoint and
-    replayed batches are no-ops).
-
-    ``maintain`` runs the family's post-drain compaction cadence
-    (sources/indexproj.compact_index): a stale projection refreshes
-    at its LIVE bucket count before any vacuum
-    (``vacuum_keep_versions``; None = never vacuum).
-    """
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(
-            chunk_batch_writer(table, sink_id, bucketed_base=bucketed_base)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    (``txpair.drain``)."""
+    drain(
+        spark,
+        source_dir,
+        schema,
+        chunk_batch_writer(table, sink_id, bucketed_base=bucketed_base),
+        checkpoint_path,
+        max_files_per_trigger,
     )
-    q.awaitTermination()
-    if maintain:
-        compact_chunk_index(
-            table,
-            bucketed_base,
-            vacuum_keep_versions=vacuum_keep_versions,
-        )
 
 
 def dedup_report(table: TxTable) -> DataFrame:

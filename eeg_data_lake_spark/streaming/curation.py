@@ -73,12 +73,11 @@ from pyspark.sql import functions as F
 
 from eeg_data_lake_spark.operators.expectations import enforce
 from eeg_data_lake_spark.sources.indexproj import (
-    bucketize_index,
     compact_index,
     index_frames,
 )
-from eeg_data_lake_spark.sources.txlog import TxTable
-from eeg_data_lake_spark.streaming.txpair import chained_commit
+from eeg_data_lake_spark.sources.txlog import TxTable, maybe_compact
+from eeg_data_lake_spark.streaming.txpair import chained_commit, drain
 from eeg_data_lake_spark.workload.curation import (
     ESD_DUP_THRESHOLD,
     _split_col,
@@ -116,45 +115,9 @@ def bench_index_table(spark: SparkSession, table: TxTable) -> TxTable:
     return TxTable(spark, table.path + "_bench")
 
 
-def bucketize_fp_index(
-    table: TxTable, base: str, n_buckets: int = 32
-) -> str:
-    """Materialize the fingerprint index as a catalog table
-    bucketed+sorted on fingerprint (sources/indexproj.py). Pass the
-    same ``base`` to the writer and every later batch's dedup probe
-    anti-joins the index base co-located — zero index-side exchange
-    per trigger — plus only the small post-projection tail. Without it
-    the probe shuffles the WHOLE fingerprint index every trigger: the
-    term that grows with the corpus, not the batch."""
-    return bucketize_index(
-        fp_index_table(table.spark, table), base, ["fingerprint"], n_buckets
-    )
-
-
-def compact_fp_index(
-    table: TxTable,
-    base: str | None,
-    n_buckets: int = 32,
-    max_small_files: int = 8,
-    target_file_bytes: int = 128 << 20,
-    small_file_bytes: int | None = None,
-    vacuum_keep_versions: int | None = None,
-    max_projection_files: int | None = None,
-) -> str | None:
-    """Post-ingest maintenance: policy-compact the fingerprint index
-    and, when ``base``'s projection is stale, re-bucketize it BEFORE
-    any vacuum (sources/indexproj.compact_index)."""
-    return compact_index(
-        fp_index_table(table.spark, table),
-        base,
-        ["fingerprint"],
-        n_buckets=n_buckets,
-        max_small_files=max_small_files,
-        target_file_bytes=target_file_bytes,
-        small_file_bytes=small_file_bytes,
-        vacuum_keep_versions=vacuum_keep_versions,
-        max_projection_files=max_projection_files,
-    )
+#: the fingerprint index's probe key: pass with ``fp_index_table(...)``
+#: to sources/indexproj.bucketize_index / compact_index
+FP_KEYS = ("fingerprint",)
 
 
 def compact_curation_state(
@@ -167,7 +130,7 @@ def compact_curation_state(
     max_projection_files: int | None = None,
 ) -> str | None:
     """Post-drain maintenance for the WHOLE five-table curation state:
-    the fingerprint index through compact_fp_index (projection-aware —
+    the fingerprint index through compact_index (projection-aware —
     a stale bucketed projection refreshes at its live bucket count
     before any vacuum), plus policy compaction of the corpus and the
     gram/inventory/bench txlogs, which ALSO take an append per
@@ -178,18 +141,17 @@ def compact_curation_state(
     graduation for EVERY leg (bin-packed outputs stop re-qualifying,
     so each fire rewrites the un-graduated tail, not the corpus — the
     amortization probes/steady_state.py measures)."""
-    from eeg_data_lake_spark.sources.txlog import maybe_compact
-
-    refreshed = compact_fp_index(
-        table,
+    spark = table.spark
+    refreshed = compact_index(
+        fp_index_table(spark, table),
         bucketed_base,
+        FP_KEYS,
         max_small_files=max_small_files,
         target_file_bytes=target_file_bytes,
         small_file_bytes=small_file_bytes,
         vacuum_keep_versions=vacuum_keep_versions,
         max_projection_files=max_projection_files,
     )
-    spark = table.spark
     others = [
         table,
         gram_index_table(spark, table),
@@ -300,7 +262,7 @@ def curation_batch_writer(
     (corpus + fingerprint/gram/inventory/bench indices) exactly-once
     per batch via ``chained_commit`` — see the module docstring for
     each leg's replay argument. ``bucketed_base`` names a
-    ``bucketize_fp_index`` projection: the dedup probe then anti-joins
+    projection bucketed on ``FP_KEYS``: the dedup probe then anti-joins
     the index base co-located (no index-side shuffle per trigger) plus
     the post-projection txlog tail."""
 
@@ -369,10 +331,6 @@ def curation_batch_writer(
                 ],
                 sink_id,
                 batch_id,
-                # every leg derives from the persisted batch-local
-                # `cand`/`valid` (the fp probe captured its frames
-                # above) -> safe to overlap the five data writes
-                stage_concurrently=True,
             )
         finally:
             cand.unpersist()
@@ -389,36 +347,17 @@ def stream_curation_ingest(
     sink_id: str,
     max_files_per_trigger: int = 1,
     bucketed_base: str | None = None,
-    maintain: bool = False,
-    vacuum_keep_versions: int | None = None,
 ) -> None:
     """Drain a file-source document stream into the curation state
-    (AvailableNow: terminates when caught up; re-invocations resume
-    from the checkpoint and replay-committed batches no-op).
-
-    ``maintain`` runs the family's post-drain compaction cadence
-    (sources/indexproj.compact_index): a stale projection refreshes
-    at its LIVE bucket count before any vacuum
-    (``vacuum_keep_versions``; None = never vacuum).
-    """
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(
-            curation_batch_writer(table, sink_id, bucketed_base=bucketed_base)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    (``txpair.drain``)."""
+    drain(
+        spark,
+        source_dir,
+        schema,
+        curation_batch_writer(table, sink_id, bucketed_base=bucketed_base),
+        checkpoint_path,
+        max_files_per_trigger,
     )
-    q.awaitTermination()
-    if maintain:
-        compact_curation_state(
-            table,
-            bucketed_base,
-            vacuum_keep_versions=vacuum_keep_versions,
-        )
 
 
 def curated_docs(table: TxTable) -> DataFrame:

@@ -46,13 +46,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eeg_data_lake_spark.operators.graph import connected_components
-from eeg_data_lake_spark.sources.indexproj import (
-    bucketize_index,
-    compact_index,
-    index_frames,
-)
+from eeg_data_lake_spark.sources.indexproj import index_frames
 from eeg_data_lake_spark.sources.txlog import TxTable
-from eeg_data_lake_spark.streaming.txpair import backfill_index, paired_commit
+from eeg_data_lake_spark.streaming.txpair import (
+    backfill_index,
+    drain,
+    paired_commit,
+)
 from eeg_data_lake_spark.workload.dedup import (
     _minhash_cols,
     band_collision_pairs,
@@ -173,46 +173,9 @@ def band_index_table(spark: SparkSession, table: TxTable) -> TxTable:
     return TxTable(spark, table.path + "_bands")
 
 
-def bucketize_band_index(
-    table: TxTable, base: str, n_buckets: int = 32
-) -> str:
-    """Materialize the band index as a catalog table bucketed+sorted
-    on band (sources/indexproj.py). Pass the same ``base`` to the
-    writer and every later batch's novelty probe reads the index base
-    co-located — bucket i vs bucket i, zero index-side exchange per
-    trigger — plus only the small post-projection tail. Cadence: at
-    compaction, when the index files get rewritten anyway."""
-    return bucketize_index(
-        band_index_table(table.spark, table), base, ["band"], n_buckets
-    )
-
-
-def compact_band_index(
-    table: TxTable,
-    base: str | None,
-    n_buckets: int = 32,
-    max_small_files: int = 8,
-    target_file_bytes: int = 128 << 20,
-    small_file_bytes: int | None = None,
-    vacuum_keep_versions: int | None = None,
-    max_projection_files: int | None = None,
-) -> str | None:
-    """Post-ingest maintenance: policy-compact the band index and,
-    when compaction ran under a live ``base`` projection, re-bucketize
-    it BEFORE any vacuum so the next trigger's probe keeps its
-    zero-exchange co-location instead of silently degrading to the
-    full read (sources/indexproj.compact_index)."""
-    return compact_index(
-        band_index_table(table.spark, table),
-        base,
-        ["band"],
-        n_buckets=n_buckets,
-        max_small_files=max_small_files,
-        target_file_bytes=target_file_bytes,
-        small_file_bytes=small_file_bytes,
-        vacuum_keep_versions=vacuum_keep_versions,
-        max_projection_files=max_projection_files,
-    )
+#: the band index's probe key: pass with ``band_index_table(...)`` to
+#: sources/indexproj.bucketize_index / compact_index
+BAND_KEYS = ("band",)
 
 
 def _band_rows(df: DataFrame) -> DataFrame:
@@ -236,7 +199,7 @@ def dedup_batch_writer(
     itself and the accepted corpus, then append exactly-once via the
     shared corpus-first/index-second discipline (streaming/txpair.py
     states the crash argument once for the whole ingest family).
-    ``bucketed_base`` names a ``bucketize_band_index`` projection: the
+    ``bucketed_base`` names a projection bucketed on ``BAND_KEYS``: the
     novelty probes then read the index base co-located (no index-side
     shuffle per trigger) plus the post-projection txlog tail.
     ``max_cc_rounds`` bounds the within-batch clustering — see
@@ -275,8 +238,6 @@ def dedup_batch_writer(
                         "left_anti",
                     )
             novel = novel.persist()
-            # both legs derive from the persisted batch-local
-            # `novel` only -> safe to overlap the data writes
             paired_commit(
                 table,
                 novel,
@@ -285,7 +246,6 @@ def dedup_batch_writer(
                 sink_id,
                 "bands",
                 batch_id,
-                stage_concurrently=True,
             )
         finally:
             # a failed/retried micro-batch must not strand persisted
@@ -305,44 +265,25 @@ def stream_dedup_ingest(
     sink_id: str,
     max_files_per_trigger: int = 1,
     bucketed_base: str | None = None,
-    maintain: bool = False,
-    vacuum_keep_versions: int | None = None,
     max_cc_rounds: int = 20,
 ) -> None:
     """Drain a file-source document stream into the deduplicated
-    accepted-corpus table (AvailableNow: terminates when caught up;
-    re-invocations resume from the checkpoint and replay-committed
-    batches are no-ops).
-
-    ``maintain`` runs the family's post-drain compaction cadence
-    (sources/indexproj.compact_index): a stale projection refreshes
-    at its LIVE bucket count before any vacuum
-    (``vacuum_keep_versions``; None = never vacuum). ``max_cc_rounds``
-    bounds each trigger's within-batch clustering explicitly
+    accepted-corpus table (``txpair.drain``). ``max_cc_rounds`` bounds
+    each trigger's within-batch clustering explicitly
     (``_batch_representatives``): a batch whose collision graph is
     deeper than a dup-cluster shape fails loudly instead of burning
     unbounded shuffle rounds.
     """
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(
-            dedup_batch_writer(
-                table,
-                sink_id,
-                bucketed_base=bucketed_base,
-                max_cc_rounds=max_cc_rounds,
-            )
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if maintain:
-        compact_band_index(
+    drain(
+        spark,
+        source_dir,
+        schema,
+        dedup_batch_writer(
             table,
-            bucketed_base,
-            vacuum_keep_versions=vacuum_keep_versions,
-        )
+            sink_id,
+            bucketed_base=bucketed_base,
+            max_cc_rounds=max_cc_rounds,
+        ),
+        checkpoint_path,
+        max_files_per_trigger,
+    )

@@ -50,7 +50,7 @@ distinct hashed grams (map-side combined). The saturation probe is
 ROW-LOCAL (duplicated == some row carries c=2 — see
 ``gram_index_table``), so the per-trigger work is filters plus
 batch-vs-index anti/semi joins, never an index-wide groupBy/sum; with
-a ``bucketize_gram_index`` projection (sources/indexproj.py) those
+a projection bucketed on ``GRAM_KEYS`` (sources/indexproj.py) those
 probes read the index base co-located — zero index-side exchange per
 trigger, only the small post-projection tail shuffling.
 """
@@ -60,13 +60,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from eeg_data_lake_spark.sources.indexproj import (
-    bucketize_index,
-    compact_index,
-    index_frames,
-)
+from eeg_data_lake_spark.sources.indexproj import index_frames
 from eeg_data_lake_spark.sources.txlog import TxTable
-from eeg_data_lake_spark.streaming.txpair import index_missing, paired_commit
+from eeg_data_lake_spark.streaming.txpair import (
+    drain,
+    index_missing,
+    paired_commit,
+)
 from eeg_data_lake_spark.workload.curation import (
     ESD_DUP_THRESHOLD,
     esd_grams,
@@ -92,50 +92,9 @@ def gram_index_table(spark: SparkSession, table: TxTable) -> TxTable:
     return TxTable(spark, table.path + "_grams")
 
 
-def bucketize_gram_index(
-    table: TxTable, base: str, n_buckets: int = 32
-) -> str:
-    """Materialize the gram index as a catalog table bucketed+sorted
-    on g (sources/indexproj.py). Pass the same ``base`` to the writer
-    and every later batch's saturation/promotion probes read the index
-    base co-located — bucket i vs bucket i, zero index-side exchange —
-    plus only the small post-projection tail. Cadence: at compaction,
-    when the index files get rewritten anyway."""
-    return bucketize_index(
-        gram_index_table(table.spark, table), base, ["g"], n_buckets
-    )
-
-
-def compact_gram_index(
-    table: TxTable,
-    base: str | None,
-    n_buckets: int = 32,
-    max_small_files: int = 8,
-    target_file_bytes: int = 128 << 20,
-    small_file_bytes: int | None = None,
-    vacuum_keep_versions: int | None = None,
-    max_projection_files: int | None = None,
-) -> str | None:
-    """Post-ingest maintenance: policy-compact the gram index and,
-    when compaction ran under a live ``base`` projection, re-bucketize
-    it BEFORE any vacuum so the next trigger's probe keeps its
-    zero-exchange co-location instead of silently degrading to the
-    full read (sources/indexproj.compact_index). A ``small_file_bytes``
-    cutoff below ``target_file_bytes`` lets bin-packed outputs
-    graduate, bounding each fire's rewrite at the un-graduated tail
-    (see compact_index's docstring; measured in
-    probes/steady_state.py)."""
-    return compact_index(
-        gram_index_table(table.spark, table),
-        base,
-        ["g"],
-        n_buckets=n_buckets,
-        max_small_files=max_small_files,
-        target_file_bytes=target_file_bytes,
-        small_file_bytes=small_file_bytes,
-        vacuum_keep_versions=vacuum_keep_versions,
-        max_projection_files=max_projection_files,
-    )
+#: the gram index's probe key: pass with ``gram_index_table(...)`` to
+#: sources/indexproj.bucketize_index / compact_index
+GRAM_KEYS = ("g",)
 
 
 def _tokenized(df: DataFrame) -> DataFrame:
@@ -161,8 +120,8 @@ def ingest_batch_writer(
     """foreachBatch function: append the raw batch to the corpus and
     fold its saturating gram counts into the index, exactly-once via
     the shared corpus-first/index-second discipline
-    (streaming/txpair.py). ``bucketed_base`` names a
-    ``bucketize_gram_index`` projection: the saturation and promotion
+    (streaming/txpair.py). ``bucketed_base`` names a projection
+    bucketed on ``GRAM_KEYS``: the saturation and promotion
     probes then read the index base co-located (no index-side shuffle
     per trigger) plus the post-projection txlog tail — without it the
     probes still avoid any index-wide AGGREGATION (the row-local c=2
@@ -252,13 +211,7 @@ def ingest_batch_writer(
             )
         else:
             delta = counts
-        # every derivation here reads only the batch and the index
-        # frames captured above -> safe to overlap the two legs' data
-        # writes (txpair's stage_concurrently contract)
-        paired_commit(
-            table, batch_df, idx, delta, sink_id, "grams", batch_id,
-            stage_concurrently=True,
-        )
+        paired_commit(table, batch_df, idx, delta, sink_id, "grams", batch_id)
 
     return process
 
@@ -272,36 +225,17 @@ def stream_exactsubstr_ingest(
     sink_id: str,
     max_files_per_trigger: int = 1,
     bucketed_base: str | None = None,
-    maintain: bool = False,
-    vacuum_keep_versions: int | None = None,
 ) -> None:
     """Drain a file-source document stream into the corpus + gram
-    index (AvailableNow: terminates when caught up; re-invocations
-    resume from the checkpoint and replay-committed batches no-op).
-
-    ``maintain`` runs the family's post-drain compaction cadence
-    (sources/indexproj.compact_index): a stale projection refreshes
-    at its LIVE bucket count before any vacuum
-    (``vacuum_keep_versions``; None = never vacuum).
-    """
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(
-            ingest_batch_writer(table, sink_id, bucketed_base=bucketed_base)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    index (``txpair.drain``)."""
+    drain(
+        spark,
+        source_dir,
+        schema,
+        ingest_batch_writer(table, sink_id, bucketed_base=bucketed_base),
+        checkpoint_path,
+        max_files_per_trigger,
     )
-    q.awaitTermination()
-    if maintain:
-        compact_gram_index(
-            table,
-            bucketed_base,
-            vacuum_keep_versions=vacuum_keep_versions,
-        )
 
 
 def exact_substring_removal(table: TxTable) -> DataFrame:

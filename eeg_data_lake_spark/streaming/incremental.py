@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eeg_data_lake_spark.sources.txlog import TxTable
+from eeg_data_lake_spark.streaming.txpair import drain
 
 
 def merge_partial_aggregates(
@@ -103,20 +104,15 @@ def maintain_incremental_gold(
 ) -> None:
     """Drain a file-source stream into an incrementally-maintained
     aggregate table (AvailableNow: terminates when caught up; restart
-    with the same checkpoint to pick up new files)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(source_dir)
-        .writeStream.foreachBatch(
-            incremental_agg_writer(table, sink_id, keys, partial_agg, sum_cols)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    with the same checkpoint to pick up new files; ``txpair.drain``)."""
+    drain(
+        spark,
+        source_dir,
+        schema,
+        incremental_agg_writer(table, sink_id, keys, partial_agg, sum_cols),
+        checkpoint_path,
+        max_files_per_trigger,
     )
-    q.awaitTermination()
 
 
 def maintain_gold_from_changes(

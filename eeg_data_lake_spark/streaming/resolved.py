@@ -58,7 +58,8 @@ path is streaming.
 Per-trigger cost is batch-sized: the comp leg's CC runs over the
 CONTRACTED batch graph (touched current roots + new docs), never the
 history. The posting probe co-locates against a
-``bucketize_posting_index`` projection exactly like every other
+projection of ``posting_table`` bucketed on ``family.probe_keys``
+(sources/indexproj.bucketize_index) exactly like every other
 streaming index probe in this package (sources/indexproj.py
 base+tail; zero index-side exchange per trigger on the base).
 
@@ -78,7 +79,6 @@ from pyspark.sql import functions as F
 
 from eeg_data_lake_spark.operators.graph import connected_components
 from eeg_data_lake_spark.sources.indexproj import (
-    bucketize_index,
     compact_index,
     index_frames,
 )
@@ -86,6 +86,7 @@ from eeg_data_lake_spark.sources.txlog import TxTable, maybe_compact
 from eeg_data_lake_spark.streaming.txpair import (
     batch_txn,
     chained_commit,
+    drain,
     index_txn,
 )
 
@@ -345,20 +346,6 @@ def consolidate_components(c_tbl: TxTable) -> bool:
     return True
 
 
-def bucketize_posting_index(
-    table: TxTable, family: ResolvedFamily, base: str, n_buckets: int = 32
-) -> str:
-    """Materialize the posting index bucketed+sorted on the family's
-    probe keys (sources/indexproj.py) so every later trigger's cross
-    probe reads the base co-located."""
-    return bucketize_index(
-        posting_table(table.spark, table),
-        base,
-        list(family.probe_keys),
-        n_buckets,
-    )
-
-
 def compact_resolved_state(
     table: TxTable,
     family: ResolvedFamily,
@@ -527,12 +514,11 @@ def resolved_batch_writer(
 ):
     """foreachBatch function maintaining the four-table resolved
     state (corpus + edges + postings + components) exactly-once per
-    batch via
-    ``chained_commit`` — see the module docstring for each leg's
-    replay argument. ``bucketed_base`` names a
-    ``bucketize_posting_index`` projection: both per-trigger probes
-    (cross pairs, novel postings) then read the index base co-located
-    plus the post-projection txlog tail."""
+    batch via ``chained_commit`` — see the module docstring for each
+    leg's replay argument. ``bucketed_base`` names a projection of
+    ``posting_table`` bucketed on ``family.probe_keys``: both
+    per-trigger probes (cross pairs, novel postings) then read the
+    index base co-located plus the post-projection txlog tail."""
 
     backfill_settled = False
 
@@ -658,37 +644,19 @@ def stream_resolved_ingest(
     family: ResolvedFamily,
     max_files_per_trigger: int = 1,
     bucketed_base: str | None = None,
-    maintain: bool = False,
-    vacuum_keep_versions: int | None = None,
 ) -> None:
     """Drain a file-source document stream into the resolved near-dup
-    state (AvailableNow: terminates when caught up; re-invocations
-    resume from the checkpoint and replay-committed batches no-op).
-
-    ``maintain`` runs the family's post-drain compaction cadence
-    (``compact_resolved_state``): a stale posting projection refreshes
-    at its LIVE bucket count before any vacuum."""
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(
-            resolved_batch_writer(
-                table, family, sink_id, bucketed_base=bucketed_base
-            )
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    state (``txpair.drain``)."""
+    drain(
+        spark,
+        source_dir,
+        schema,
+        resolved_batch_writer(
+            table, family, sink_id, bucketed_base=bucketed_base
+        ),
+        checkpoint_path,
+        max_files_per_trigger,
     )
-    q.awaitTermination()
-    if maintain:
-        compact_resolved_state(
-            table,
-            family,
-            bucketed_base,
-            vacuum_keep_versions=vacuum_keep_versions,
-        )
 
 
 def _cc_losers(edges: DataFrame, max_cc_rounds: int) -> DataFrame:

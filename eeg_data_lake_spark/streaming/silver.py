@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from eeg_data_lake_spark import schemas
 from eeg_data_lake_spark.pipeline.silver import silver_from_bronze
+from eeg_data_lake_spark.streaming.txpair import drain
 
 
 def stream_silver_from_bronze_dir(
@@ -51,12 +52,4 @@ def stream_silver_from_bronze_dir(
         # the idempotence Delta's txn log would otherwise provide.
         out.write.mode("overwrite").parquet(f"{sink_path}/b{batch_id:06d}")
 
-    q = (
-        spark.readStream.schema(bronze_schema)
-        .parquet(bronze_path)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(spark, bronze_path, bronze_schema, process, checkpoint_path, None)

@@ -44,13 +44,13 @@ Hamming-verified edges (shallow), and one batch-vs-index equi-join on
 (j, block) — 4·|batch| probe rows against an index of 4·|accepted|
 compact rows (two 16-bit keys + two 32-bit halves; never text). The
 index side of that join is the term that grows with the CORPUS, so
-``bucketize_block_index`` materializes it as a bucketed projection
-and the probe then reads the base co-located — zero index-side
-exchange per trigger, only the post-projection tail shuffling
-(sources/indexproj.py; plan pinned in tests/test_indexproj.py). Hot
-blocks (e.g. the all-zeros block of degenerate docs) are the skew
-point, same as batch r41 — cap block buckets like MAX_SHINGLE_DF at
-100 TB.
+sources/indexproj.bucketize_index materializes it as a projection
+bucketed on ``BLOCK_KEYS`` and the probe then reads the base
+co-located — zero index-side exchange per trigger, only the
+post-projection tail shuffling (sources/indexproj.py; plan pinned in
+tests/test_indexproj.py). Hot blocks (e.g. the all-zeros block of
+degenerate docs) are the skew point, same as batch r41 — cap block
+buckets like MAX_SHINGLE_DF at 100 TB.
 
 Reference capability upgraded: the reference's batch idempotent
 rewrite loop (/root/reference/bronze-to-silver.py:74-76) re-runs the
@@ -63,13 +63,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from eeg_data_lake_spark.operators.graph import connected_components
-from eeg_data_lake_spark.sources.indexproj import (
-    bucketize_index,
-    compact_index,
-    index_frames,
-)
+from eeg_data_lake_spark.sources.indexproj import index_frames
 from eeg_data_lake_spark.sources.txlog import TxTable
-from eeg_data_lake_spark.streaming.txpair import backfill_index, paired_commit
+from eeg_data_lake_spark.streaming.txpair import (
+    backfill_index,
+    drain,
+    paired_commit,
+)
 from eeg_data_lake_spark.workload.dedup import (
     hamming64,
     simhash_block_rows,
@@ -97,46 +97,9 @@ def block_index_table(spark: SparkSession, table: TxTable) -> TxTable:
     return TxTable(spark, table.path + "_simhash")
 
 
-def bucketize_block_index(
-    table: TxTable, base: str, n_buckets: int = 32
-) -> str:
-    """Materialize the block index as a catalog table bucketed+sorted
-    on (j, block) (sources/indexproj.py). Pass the same ``base`` to
-    the writer and every later batch's novelty probe joins the index
-    base co-located — bucket i vs bucket i, zero index-side exchange
-    per trigger — plus only the small post-projection tail. Cadence:
-    at compaction, when the index files get rewritten anyway."""
-    return bucketize_index(
-        block_index_table(table.spark, table), base, ["j", "block"], n_buckets
-    )
-
-
-def compact_block_index(
-    table: TxTable,
-    base: str | None,
-    n_buckets: int = 32,
-    max_small_files: int = 8,
-    target_file_bytes: int = 128 << 20,
-    small_file_bytes: int | None = None,
-    vacuum_keep_versions: int | None = None,
-    max_projection_files: int | None = None,
-) -> str | None:
-    """Post-ingest maintenance: policy-compact the block index and,
-    when compaction ran under a live ``base`` projection, re-bucketize
-    it BEFORE any vacuum so the next trigger's probe keeps its
-    zero-exchange co-location instead of silently degrading to the
-    full read (sources/indexproj.compact_index)."""
-    return compact_index(
-        block_index_table(table.spark, table),
-        base,
-        ["j", "block"],
-        n_buckets=n_buckets,
-        max_small_files=max_small_files,
-        target_file_bytes=target_file_bytes,
-        small_file_bytes=small_file_bytes,
-        vacuum_keep_versions=vacuum_keep_versions,
-        max_projection_files=max_projection_files,
-    )
+#: the block index's probe keys: pass with ``block_index_table(...)``
+#: to sources/indexproj.bucketize_index / compact_index
+BLOCK_KEYS = ("j", "block")
 
 
 def cross_batch_hits(
@@ -267,7 +230,7 @@ def simhash_batch_writer(
     against itself and the accepted corpus, then append exactly-once
     (corpus first, block index second — see module docstring for the
     crash-safety argument). ``bucketed_base`` names a
-    ``bucketize_block_index`` projection: the cross-batch probe then
+    projection bucketed on ``BLOCK_KEYS``: the cross-batch probe then
     joins the index base co-located (no index-side shuffle per
     trigger) plus the post-projection txlog tail."""
 
@@ -306,8 +269,6 @@ def simhash_batch_writer(
                 novel = novel.join(hits, "doc_id", "left_anti").persist()
             else:
                 novel = novel.persist()
-            # both legs derive from the persisted batch-local
-            # `novel` only -> safe to overlap the data writes
             paired_commit(
                 table,
                 novel.drop("n_shingles", *FP_COLS),
@@ -316,7 +277,6 @@ def simhash_batch_writer(
                 sink_id,
                 "blocks",
                 batch_id,
-                stage_concurrently=True,
             )
         finally:
             # a failed/retried micro-batch must not strand the persisted
@@ -339,45 +299,26 @@ def stream_simhash_ingest(
     max_files_per_trigger: int = 1,
     max_hamming: int = 3,
     bucketed_base: str | None = None,
-    maintain: bool = False,
-    vacuum_keep_versions: int | None = None,
     max_cc_rounds: int = 20,
 ) -> None:
     """Drain a file-source document stream into the SimHash-
-    deduplicated accepted-corpus table (AvailableNow: terminates when
-    caught up; re-invocations resume from the checkpoint and
-    replay-committed batches are no-ops).
-
-    ``maintain`` runs the family's post-drain compaction cadence
-    (sources/indexproj.compact_index): a stale projection refreshes
-    at its LIVE bucket count before any vacuum
-    (``vacuum_keep_versions``; None = never vacuum).
+    deduplicated accepted-corpus table (``txpair.drain``).
     ``max_cc_rounds`` bounds each trigger's within-batch clustering
     explicitly (``_batch_representatives``): a batch whose verified
     pair graph is deeper than a dup-cluster shape fails loudly instead
     of burning unbounded shuffle rounds.
     """
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(
-            simhash_batch_writer(
-                table,
-                sink_id,
-                max_hamming=max_hamming,
-                bucketed_base=bucketed_base,
-                max_cc_rounds=max_cc_rounds,
-            )
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if maintain:
-        compact_block_index(
+    drain(
+        spark,
+        source_dir,
+        schema,
+        simhash_batch_writer(
             table,
-            bucketed_base,
-            vacuum_keep_versions=vacuum_keep_versions,
-        )
+            sink_id,
+            max_hamming=max_hamming,
+            bucketed_base=bucketed_base,
+            max_cc_rounds=max_cc_rounds,
+        ),
+        checkpoint_path,
+        max_files_per_trigger,
+    )

@@ -1,15 +1,23 @@
-"""The shared two-table exactly-once commit discipline for the
-streaming ingest family: a corpus table plus a companion index table,
-committed corpus-FIRST then index, each under its own batch-keyed txn
-id.
+"""The shared streaming ingest scaffolding: the one file-stream drain
+(``drain``) and the two-table exactly-once commit discipline — a
+corpus table plus companion index tables, committed corpus-FIRST then
+index, each under its own batch-keyed txn id.
 
-Every incremental ingest in this package maintains that pair —
-MinHash-LSH bands (streaming/dedup.py), ExactSubstr grams
-(streaming/exactsubstr.py), SimHash blocks (streaming/simhash.py),
-CDC chunks (streaming/chunkdedup.py) — and previously each hand-rolled
-the same ordering + naming + crash argument. This module is the single
-implementation; the crash matrix is property-tested ONCE centrally
-(tests/test_txpair.py) instead of re-argued per ingest.
+Every incremental ingest in this package maintains such a pair, and
+all seven families — MinHash-LSH bands (streaming/dedup.py),
+ExactSubstr grams (streaming/exactsubstr.py), SimHash blocks
+(streaming/simhash.py), CDC chunks (streaming/chunkdedup.py), ANN
+centroid sets (streaming/annindex.py), the five-table curation state
+(streaming/curation.py) and the four-table resolved near-dup state
+(streaming/resolved.py) — commit through ``paired_commit`` /
+``chained_commit`` here, so the ordering + naming + crash argument is
+implemented once and its crash matrix property-tested ONCE centrally
+(tests/test_txpair.py) instead of re-argued per ingest. ``drain`` is
+the one place a file-source stream is wired to a foreachBatch writer
+(readStream → foreachBatch → checkpoint → availableNow): each family
+module keeps only its batch writer, its index tables and its probe
+key constant, which callers pass straight to
+sources/indexproj.bucketize_index / compact_index.
 
 The crash argument, stated once:
 
@@ -46,7 +54,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from eeg_data_lake_spark.sources.contracts import (
     append_compatibility_problems,
@@ -166,6 +174,34 @@ def contract_gate(target: TxTable, df: DataFrame):
     return _fold
 
 
+def drain(
+    spark: SparkSession,
+    source_dir: str,
+    schema,
+    writer: Callable[[DataFrame, int], None],
+    checkpoint_path: str,
+    max_files_per_trigger: int | None,
+) -> None:
+    """Drain the parquet file stream under ``source_dir`` through the
+    foreachBatch ``writer`` with AvailableNow semantics: returns once
+    every file present at start has been processed; a re-invocation
+    with the same ``checkpoint_path`` resumes there, and batches the
+    writer already committed replay as no-ops. ``maxFilesPerTrigger``
+    is set only when ``max_files_per_trigger`` is not None (otherwise
+    Spark's default of one trigger for all available files applies)."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    (
+        reader.parquet(source_dir)
+        .writeStream.foreachBatch(writer)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def batch_txn(sink_id: str, batch_id: int) -> str:
     """The corpus-leg txn id every paired ingest uses."""
     return f"{sink_id}:batch-{batch_id}"
@@ -219,22 +255,14 @@ def paired_commit(
     sink_id: str,
     tag: str,
     batch_id: int,
-    stage_concurrently: bool = False,
 ) -> None:
     """Commit one micro-batch to the (corpus, index) pair under the
     shared discipline: corpus append first under ``batch_txn``, index
     append second under ``index_txn``. Either leg may be a zero-arg
     callable, invoked only if that leg has not already committed —
     replays then skip the leg's (possibly expensive) derivation, not
-    just its write. ``stage_concurrently`` — see ``chained_commit``."""
-    chained_commit(
-        table,
-        corpus_df,
-        [(idx, index_df, tag)],
-        sink_id,
-        batch_id,
-        stage_concurrently=stage_concurrently,
-    )
+    just its write."""
+    chained_commit(table, corpus_df, [(idx, index_df, tag)], sink_id, batch_id)
 
 
 def chained_commit(
@@ -244,7 +272,6 @@ def chained_commit(
     sink_id: str,
     batch_id: int,
     known_committed: dict[str, bool] | None = None,
-    stage_concurrently: bool = False,
 ) -> None:
     """The pair discipline generalized to one corpus + N index legs,
     committed in the FIXED order given: corpus first under
@@ -279,29 +306,9 @@ def chained_commit(
     re-probe here would be. Ids absent from the dict fall back to a
     live ``has_txn``.
 
-    ``stage_concurrently=True`` (round-11, guide §2.6) overlaps the
-    uncommitted legs' DATA-WRITE jobs (``TxTable.stage``) and then
-    commits the manifests in the same fixed order. Sound because the
-    txlog's commit point is the manifest hardlink — staged files are
-    invisible orphans until ``commit_staged`` — so a crash anywhere
-    before leg k's commit leaves legs >= k uncommitted exactly as the
-    serial form does (property-tested at both seams in
-    tests/test_txpair.py). It is the CALLER's assertion that every
-    leg's derivation is insensitive to whether THIS batch's earlier
-    legs have committed — a strictly stronger form of the replay
-    contract above, satisfied by every derivation that reads only the
-    batch and pre-captured index frames (the minhash/simhash/chunk/
-    exactsubstr/curation ingests). streaming/resolved.py must NOT opt
-    in: its component leg deliberately folds the edges table AFTER the
-    edges leg committed. Differences vs serial, stated: contract gates
-    run up front (a refused batch commits NOTHING instead of a prefix
-    — strictly fewer partial states, and replay after the fix
-    converges identically), and a mid-staging failure likewise commits
-    nothing. Measured motivation (OPTIMIZATION_r11.md, "Where the
-    round-10 verdict's top task actually went", sf0.1): the
-    per-trigger cost is ~0.39 s per leg of Spark data-write job vs
-    ~5 ms of manifest fsync+replay — overlapping the jobs is the fix;
-    batching the fsync records would have saved nothing.
+    Legs are written and committed one at a time: overlapping their
+    data-write jobs on a thread pool made a two-leg ingest's median
+    trigger only 1.10x faster, too little for a second commit path.
     """
 
     def committed(tbl: TxTable, txn: str) -> bool:
@@ -309,46 +316,14 @@ def chained_commit(
             return known_committed[txn]
         return tbl.has_txn(txn)
 
-    if not stage_concurrently:
-        if not committed(table, batch_txn(sink_id, batch_id)):
-            df = corpus_df() if callable(corpus_df) else corpus_df
-            fold = contract_gate(table, df)
-            table.append(df, txn_id=batch_txn(sink_id, batch_id))
-            fold()
-        for idx, rows, tag in legs:
-            if not committed(idx, index_txn(sink_id, tag, batch_id)):
-                df = rows() if callable(rows) else rows
-                fold = contract_gate(idx, df)
-                idx.append(df, txn_id=index_txn(sink_id, tag, batch_id))
-                fold()
-        return
-
-    pending: list[tuple[TxTable, DataFrame, str]] = []
     if not committed(table, batch_txn(sink_id, batch_id)):
         df = corpus_df() if callable(corpus_df) else corpus_df
-        pending.append((table, df, batch_txn(sink_id, batch_id)))
-    for idx, rows, tag in legs:
-        txn = index_txn(sink_id, tag, batch_id)
-        if not committed(idx, txn):
-            df = rows() if callable(rows) else rows
-            pending.append((idx, df, txn))
-    if not pending:
-        return
-    folds = [contract_gate(tbl, df) for tbl, df, _ in pending]
-    if len(pending) == 1:
-        staged = [pending[0][0].stage(pending[0][1])]
-    else:
-        # 2-3 jobs in flight is the guide's own sizing: enough to fill
-        # the tail of one leg's write with the next leg's work, not so
-        # many that tiny jobs fight for task slots
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(
-            max_workers=min(len(pending), 3)
-        ) as pool:
-            staged = list(
-                pool.map(lambda p: p[0].stage(p[1]), pending)
-            )
-    for (tbl, _df, txn), st, fold in zip(pending, staged, folds):
-        tbl.commit_staged(st, txn_id=txn)
+        fold = contract_gate(table, df)
+        table.append(df, txn_id=batch_txn(sink_id, batch_id))
         fold()
+    for idx, rows, tag in legs:
+        if not committed(idx, index_txn(sink_id, tag, batch_id)):
+            df = rows() if callable(rows) else rows
+            fold = contract_gate(idx, df)
+            idx.append(df, txn_id=index_txn(sink_id, tag, batch_id))
+            fold()

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from eeg_data_lake_spark.sources.txlog import TxTable
-from eeg_data_lake_spark.streaming.txpair import chained_commit
+from eeg_data_lake_spark.streaming.txpair import chained_commit, drain
 
 
 def txtable_batch_writer(table: TxTable, sink_id: str):
@@ -44,16 +44,13 @@ def stream_to_txtable(
     sink_id: str,
     max_files_per_trigger: int | None = None,
 ) -> None:
-    """Drain a file-source stream into ``table`` exactly-once with
-    AvailableNow semantics (terminates when caught up)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(source_dir)
-        .writeStream.foreachBatch(txtable_batch_writer(table, sink_id))
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    """Drain a file-source stream into ``table`` exactly-once
+    (``txpair.drain``)."""
+    drain(
+        spark,
+        source_dir,
+        schema,
+        txtable_batch_writer(table, sink_id),
+        checkpoint_path,
+        max_files_per_trigger,
     )
-    q.awaitTermination()

@@ -932,14 +932,15 @@ def z40_streaming_chunk_maintained(
     """z24's incremental CDC chunk-store ingest with the chunk-index
     family's FULL maintenance cadence live mid-stream -- the z34
     treatment applied to the content-addressed path: batches 0+1
-    drain plain, then ``bucketize_chunk_index`` materializes the
-    chunk index as a catalog table bucketed+sorted on chunk_md5 at
-    the session shuffle width and a FORCED ``compact_chunk_index``
+    drain plain, then ``bucketize_index`` materializes the chunk
+    index as a catalog table bucketed+sorted on ``CHUNK_KEYS`` at
+    the session shuffle width and a FORCED ``compact_index``
     (max_small_files=1) policy-compacts it, repairs the now-stale
     projection at its live bucket count, and vacuums; batch 2 drains
     against the compacted bucketed base + txlog tail (its novelty
-    probe anti-joins the projection co-located) with
-    ``maintain=True`` running the cadence once more. The terminal
+    probe anti-joins the projection co-located), and
+    ``compact_index`` (default policy, vacuum to 2 versions) runs the
+    cadence once more after it. The terminal
     storage report must STILL equal the batch chunking of the full
     corpus, so this query shares z24's oracle verbatim --
     bucketize/compaction/vacuum churn proven output-invisible under
@@ -951,11 +952,15 @@ def z40_streaming_chunk_maintained(
     import os
     import uuid
 
-    from eeg_data_lake_spark.sources.indexproj import gc_projections
+    from eeg_data_lake_spark.sources.indexproj import (
+        bucketize_index,
+        compact_index,
+        gc_projections,
+    )
     from eeg_data_lake_spark.sources.txlog import TxTable
     from eeg_data_lake_spark.streaming.chunkdedup import (
-        bucketize_chunk_index,
-        compact_chunk_index,
+        CHUNK_KEYS,
+        chunk_index_table,
         dedup_report,
         stream_chunk_ingest,
     )
@@ -980,17 +985,18 @@ def z40_streaming_chunk_maintained(
         spark, src, schema, tbl, ck, sink_id="z40", bucketed_base=base
     )
     n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    bucketize_chunk_index(tbl, base, n_buckets=n_buckets)
-    compact_chunk_index(
-        tbl, base, n_buckets=n_buckets,
+    chunks = chunk_index_table(spark, tbl)
+    bucketize_index(chunks, base, CHUNK_KEYS, n_buckets)
+    compact_index(
+        chunks, base, CHUNK_KEYS, n_buckets=n_buckets,
         max_small_files=1, vacuum_keep_versions=2,
     )
 
     os.rename(held, os.path.join(src, "batch_2.parquet"))
     stream_chunk_ingest(
-        spark, src, schema, tbl, ck, sink_id="z40",
-        bucketed_base=base, maintain=True, vacuum_keep_versions=2,
+        spark, src, schema, tbl, ck, sink_id="z40", bucketed_base=base
     )
+    compact_index(chunks, base, CHUNK_KEYS, vacuum_keep_versions=2)
     return dedup_report(tbl)
 
 

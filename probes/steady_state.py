@@ -51,10 +51,13 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from eeg_data_lake_spark.session import get_spark  # noqa: E402
+from eeg_data_lake_spark.sources.indexproj import (  # noqa: E402
+    bucketize_index,
+    compact_index,
+)
 from eeg_data_lake_spark.sources.txlog import TxTable, maybe_compact  # noqa: E402
 from eeg_data_lake_spark.streaming.exactsubstr import (  # noqa: E402
-    bucketize_gram_index,
-    compact_gram_index,
+    GRAM_KEYS,
     exact_substring_removal,
     gram_index_table,
     ingest_batch_writer,
@@ -186,7 +189,12 @@ def main() -> None:
         if i == 0:
             # production shape: the co-located projection exists from
             # the first maintenance window onward
-            bucketize_gram_index(tbl, base, n_buckets=N_BUCKETS)
+            bucketize_index(
+                gram_index_table(spark, tbl),
+                base,
+                GRAM_KEYS,
+                n_buckets=N_BUCKETS,
+            )
 
         # the rewrite-candidate set a fire would move: files still
         # under the graduation cutoff
@@ -201,9 +209,10 @@ def main() -> None:
         proj_sigs_pre = proj_file_sigs(spark, base)
 
         t0 = time.perf_counter()
-        idx_v = compact_gram_index(
-            tbl,
+        idx_v = compact_index(
+            gram_index_table(spark, tbl),
             base,
+            GRAM_KEYS,
             n_buckets=N_BUCKETS,
             max_small_files=MAX_SMALL,
             target_file_bytes=TARGET_BYTES,

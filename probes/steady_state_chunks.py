@@ -5,7 +5,7 @@ The 100x table names z40's steepener as "put + forced full
 compactions each move corpus-proportional content bytes — by design,
 amortized in production cadence". This probe measures that
 amortization for BOTH legs that hold real bytes: the chunk-hash index
-(compact_chunk_index, with the graduation cutoff and the tail-bounded
+(compact_index, with the graduation cutoff and the tail-bounded
 projection extend) and the payload-bearing corpus txlog
 (maybe_compact with the same cutoff). Per trigger it records
 
@@ -51,15 +51,18 @@ from eeg_data_lake_spark.functions.multimodal import (  # noqa: E402
     attach_binary_payload,
 )
 from eeg_data_lake_spark.session import get_spark  # noqa: E402
+from eeg_data_lake_spark.sources.indexproj import (  # noqa: E402
+    bucketize_index,
+    compact_index,
+)
 from eeg_data_lake_spark.sources.txlog import (  # noqa: E402
     TxTable,
     maybe_compact,
 )
 from eeg_data_lake_spark.streaming.chunkdedup import (  # noqa: E402
-    bucketize_chunk_index,
+    CHUNK_KEYS,
     chunk_batch_writer,
     chunk_index_table,
-    compact_chunk_index,
     dedup_report,
 )
 from probes.steady_state import median, proj_file_sigs  # noqa: E402
@@ -132,16 +135,22 @@ def main() -> None:
         ingest_s = round(time.perf_counter() - t0, 3)
 
         if i == 0:
-            bucketize_chunk_index(tbl, base, n_buckets=N_BUCKETS)
+            bucketize_index(
+                chunk_index_table(spark, tbl),
+                base,
+                CHUNK_KEYS,
+                n_buckets=N_BUCKETS,
+            )
 
         idx_small, idx_bytes, idx_files = small_bytes_of(idx)
         cor_small, cor_bytes, cor_files = small_bytes_of(tbl)
         proj_sigs_pre = proj_file_sigs(spark, base)
 
         t0 = time.perf_counter()
-        idx_v = compact_chunk_index(
-            tbl,
+        idx_v = compact_index(
+            chunk_index_table(spark, tbl),
             base,
+            CHUNK_KEYS,
             n_buckets=N_BUCKETS,
             max_small_files=MAX_SMALL,
             target_file_bytes=TARGET_BYTES,

@@ -22,3 +22,36 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def maintenance_log(monkeypatch):
+    """The order of the streaming drains (``streaming/txpair.drain``)
+    and index compactions (``sources/indexproj.compact_index``) made
+    while the test runs, as a list of ``"drain"`` / ``"compact"``,
+    counting calls through every module that bound either name at
+    import."""
+    import importlib
+    import pkgutil
+    import sys
+
+    import eeg_data_lake_spark.streaming as streaming
+    from eeg_data_lake_spark.sources import indexproj
+    from eeg_data_lake_spark.streaming import txpair
+
+    for m in pkgutil.iter_modules(streaming.__path__, streaming.__name__ + "."):
+        importlib.import_module(m.name)
+    log: list[str] = []
+    for event, real in (("drain", txpair.drain), ("compact", indexproj.compact_index)):
+
+        def logged(*args, _real=real, _event=event, **kwargs):
+            log.append(_event)
+            return _real(*args, **kwargs)
+
+        for name, mod in list(sys.modules.items()):
+            if (
+                name.startswith("eeg_data_lake_spark.")
+                and getattr(mod, real.__name__, None) is real
+            ):
+                monkeypatch.setattr(mod, real.__name__, logged)
+    return log

@@ -254,171 +254,6 @@ def test_adaptive_tracks_drift_where_fixed_fails(spark, tmp_path):
     assert np.mean(rec_fixed) <= 0.6, rec_fixed
 
 
-def test_generation_compaction_bounds_fanout_and_keeps_recall(
-    spark, tmp_path
-):
-    """compact_generations re-assigns the corpus under the newest
-    centroid set and collapses quantizer history: probe fan-out drops
-    to ONE generation, drift recall holds, a crash between the two
-    legs leaves probes correct, and ingest resumes cleanly after."""
-    from eeg_data_lake_spark.streaming.annindex import (
-        _sets_from_rows,
-        compact_generations,
-    )
-
-    init_cents = _drift_init_cents()
-    adapt = TxTable(spark, str(tmp_path / "adapt"))
-    init_centroid_set(centroid_table(spark, adapt), init_cents)
-    aw = adaptive_index_batch_writer(adapt, "ada", count_cap=2 * DRIFT_PER)
-    batches = _drift_batches()
-    for bid, rows in enumerate(batches):
-        aw(
-            spark.createDataFrame(
-                rows, "vec_id long, embedding array<double>"
-            ),
-            bid,
-        )
-
-    ctable = centroid_table(spark, adapt)
-    assert len(_sets_from_rows(ctable.read().collect())) == DRIFT_T + 1
-
-    # crash window: corpus leg lands, quantizer leg dies
-    real_overwrite = TxTable.overwrite
-
-    def bomb(self, *a, **k):
-        if self.path.endswith("_centroids"):
-            raise RuntimeError("injected crash between compact legs")
-        return real_overwrite(self, *a, **k)
-
-    TxTable.overwrite = bomb
-    try:
-        with pytest.raises(RuntimeError, match="injected"):
-            compact_generations(adapt)
-    finally:
-        TxTable.overwrite = real_overwrite
-    # mid-crash: every corpus row already carries the newest cset, so
-    # old-set probes prune to zero files and results stay correct
-    assert adapt.read().filter(
-        F.col("cset") != DRIFT_T
-    ).count() == 0
-    q0 = _drift_center(0, DRIFT_T) + 0.01
-    mid = {r.vec_id for r in probe_topk_adaptive(adapt, q0.tolist(), 2, 5).collect()}
-
-    # re-run completes the quantizer leg (corpus leg replays as no-op)
-    v = adapt.version()
-    compact_generations(adapt)
-    assert adapt.version() == v  # cset-keyed txn: corpus not rewritten
-    sets = _sets_from_rows(ctable.read().collect())
-    assert list(sets) == [DRIFT_T]  # history collapsed
-    assert sets[DRIFT_T][1] == [DRIFT_T * DRIFT_PER] * K_CELLS
-
-    post = {r.vec_id for r in probe_topk_adaptive(adapt, q0.tolist(), 2, 5).collect()}
-    assert post == mid
-
-    # drift recall still holds at single-generation fan-out
-    all_rows = [r for b in batches for r in b]
-    M = np.array([v for _, v in all_rows])
-    ids = np.array([i for i, _ in all_rows])
-    Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-    qrng = np.random.default_rng(7)
-    rec = []
-    for qi in range(8):
-        q = _drift_center(qi % K_CELLS, DRIFT_T) + (
-            qrng.standard_normal(DIM) * DRIFT_SIGMA
-        )
-        qn = q / np.linalg.norm(q)
-        truth = set(ids[np.argsort(-(Mn @ qn))[:5]].tolist())
-        got = {
-            r.vec_id
-            for r in probe_topk_adaptive(adapt, q.tolist(), 2, 5).collect()
-        }
-        rec.append(len(got & truth) / 5)
-    assert np.mean(rec) >= 0.9, rec
-
-    # ingest resumes: the next batch lands as generation DRIFT_T + 1
-    extra = [
-        (int(9000 + j), [float(x) for x in _drift_center(0, DRIFT_T)])
-        for j in range(3)
-    ]
-    aw(
-        spark.createDataFrame(extra, "vec_id long, embedding array<double>"),
-        DRIFT_T,
-    )
-    assert sorted(_sets_from_rows(ctable.read().collect())) == [
-        DRIFT_T,
-        DRIFT_T + 1,
-    ]
-    got = {
-        r.vec_id
-        for r in probe_topk_adaptive(
-            adapt, _drift_center(0, DRIFT_T).tolist(), 2, 3
-        ).collect()
-    }
-    assert got & {9000, 9001, 9002}
-
-
-def test_compaction_race_spares_concurrent_batch(spark, tmp_path):
-    """A batch committing BETWEEN compact_generations' snapshot read
-    and its overwrite must survive: both compaction legs are pinned to
-    the snapshot they derived from, so the racing batch keeps its
-    corpus file AND its centroid set, and probes still find its
-    vectors."""
-    from eeg_data_lake_spark.streaming.annindex import (
-        _sets_from_rows,
-        compact_generations,
-    )
-
-    init_cents = _drift_init_cents()
-    tbl = TxTable(spark, str(tmp_path / "race"))
-    init_centroid_set(centroid_table(spark, tbl), init_cents)
-    aw = adaptive_index_batch_writer(tbl, "ada", count_cap=16)
-    batches = _drift_batches()[:2]
-    for bid, rows in enumerate(batches):
-        aw(
-            spark.createDataFrame(rows, "vec_id long, embedding array<double>"),
-            bid,
-        )
-
-    late = [(7000 + j, [float(x) for x in _drift_center(3, 2)]) for j in range(3)]
-    raced = {"done": False}
-    real_overwrite = TxTable.overwrite
-
-    def racing(self, df, txn_id=None, pin_version=None):
-        # fire the concurrent ingest ONCE, just before the corpus leg
-        if not self.path.endswith("_centroids") and not raced["done"]:
-            raced["done"] = True
-            aw(
-                spark.createDataFrame(
-                    late, "vec_id long, embedding array<double>"
-                ),
-                2,
-            )
-        return real_overwrite(
-            self, df, txn_id=txn_id, pin_version=pin_version
-        )
-
-    TxTable.overwrite = racing
-    try:
-        compact_generations(tbl)
-    finally:
-        TxTable.overwrite = real_overwrite
-
-    # the racing batch's rows and its centroid generation survived
-    ids = {r.vec_id for r in tbl.read().collect()}
-    assert {7000, 7001, 7002} <= ids
-    sets = _sets_from_rows(
-        centroid_table(spark, tbl).read().collect()
-    )
-    assert sorted(sets) == [2, 3]  # collapsed set + the racer's new set
-    got = {
-        r.vec_id
-        for r in probe_topk_adaptive(
-            tbl, _drift_center(3, 2).tolist(), nprobe=2, k=3
-        ).collect()
-    }
-    assert got & {7000, 7001, 7002}
-
-
 def test_probe_before_first_batch_returns_empty(spark, tmp_path):
     """A probe racing the first trigger (quantizer initialized, no
     corpus yet) is a normal service state: empty top-k, not
@@ -450,10 +285,7 @@ def test_adaptive_replay_and_crash_window(spark, tmp_path):
             )
             if bid == crash_batch:
                 # the crash seam is the centroid leg's manifest COMMIT
-                # (TxTable.commit_staged — paired_commit stages the two
-                # legs' data concurrently now, but staged files are
-                # invisible orphans, so "between the corpus commit and
-                # the centroid commit" is the same window as before)
+                # (TxTable.commit_staged, through which append commits)
                 real_commit = TxTable.commit_staged
 
                 def bomb(self, *a, **k):

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from eeg_data_lake_spark.plans import count_exchanges, join_strategies
 from eeg_data_lake_spark.sources.indexproj import (
     bucketize_index,
+    compact_index,
     index_frames,
     newest_projection,
 )
@@ -159,7 +160,7 @@ def test_chunk_probe_drops_index_exchange_and_matches(
     spark, tmp_path, base
 ):
     from eeg_data_lake_spark.streaming.chunkdedup import (
-        bucketize_chunk_index,
+        CHUNK_KEYS,
         chunk_batch_writer,
         chunk_index_table,
     )
@@ -180,7 +181,9 @@ def test_chunk_probe_drops_index_exchange_and_matches(
 
     bkt_w = chunk_batch_writer(bkt_t, "b", bucketed_base=base)
     bkt_w(blobs(b0), 0)
-    bucketize_chunk_index(bkt_t, base, n_buckets=4)
+    bucketize_index(
+        chunk_index_table(spark, bkt_t), base, CHUNK_KEYS, n_buckets=4
+    )
     bkt_w(blobs(b1), 1)  # probes projection (no tail yet)
     bkt_w(blobs(b2), 2)  # probes projection + batch-1 tail
     want = {
@@ -198,7 +201,9 @@ def test_chunk_probe_drops_index_exchange_and_matches(
     from eeg_data_lake_spark.streaming.chunkdedup import novel_against
 
     idx = chunk_index_table(spark, bkt_t)
-    bucketize_chunk_index(bkt_t, base, n_buckets=4)
+    bucketize_index(
+        chunk_index_table(spark, bkt_t), base, CHUNK_KEYS, n_buckets=4
+    )
     batch_chunks = (
         chunk_rows(blobs([(9, shared + b"q" * 100)]))
         .groupBy("chunk_md5")
@@ -222,8 +227,8 @@ def test_band_probe_drops_index_exchange_and_matches(
 ):
     from eeg_data_lake_spark.streaming.dedup import (
         BAND_COLS,
+        BAND_KEYS,
         band_index_table,
-        bucketize_band_index,
         dedup_batch_writer,
         with_bands,
     )
@@ -244,7 +249,9 @@ def test_band_probe_drops_index_exchange_and_matches(
     bkt_t = TxTable(spark, str(tmp_path / "bkt"))
     wb = dedup_batch_writer(bkt_t, "b", bucketed_base=base)
     wb(docs(b0), 0)
-    bucketize_band_index(bkt_t, base, n_buckets=4)
+    bucketize_index(
+        band_index_table(spark, bkt_t), base, BAND_KEYS, n_buckets=4
+    )
     wb(docs(b1), 1)  # probes the projection
     assert {r.doc_id for r in bkt_t.read().collect()} == {
         r.doc_id for r in plain_t.read().collect()
@@ -259,7 +266,9 @@ def test_band_probe_drops_index_exchange_and_matches(
 
     # plan pin on the probe itself (the writer's chained anti-joins)
     idx = band_index_table(spark, bkt_t)
-    bucketize_band_index(bkt_t, base, n_buckets=4)
+    bucketize_index(
+        band_index_table(spark, bkt_t), base, BAND_KEYS, n_buckets=4
+    )
 
     def probe(frames):
         novel = with_bands(docs([(99, "alpha beta gamma delta epsilon")]))
@@ -291,8 +300,8 @@ def test_gram_probe_drops_index_exchange_and_matches(
     spark, tmp_path, base
 ):
     from eeg_data_lake_spark.streaming.exactsubstr import (
+        GRAM_KEYS,
         _gram_counts,
-        bucketize_gram_index,
         exact_substring_removal,
         gram_index_table,
         ingest_batch_writer,
@@ -316,7 +325,9 @@ def test_gram_probe_drops_index_exchange_and_matches(
     bkt_t = TxTable(spark, str(tmp_path / "bkt"))
     wb = ingest_batch_writer(bkt_t, "b", bucketed_base=base)
     wb(docs(b0), 0)
-    bucketize_gram_index(bkt_t, base, n_buckets=4)
+    bucketize_index(
+        gram_index_table(spark, bkt_t), base, GRAM_KEYS, n_buckets=4
+    )
     wb(docs(b1), 1)  # probes the projection
     # identical dup semantics: the shared span is removed on BOTH sides
     assert sorted(
@@ -332,7 +343,9 @@ def test_gram_probe_drops_index_exchange_and_matches(
     # plan pin: the saturation anti-join against the projection drops
     # the index-side exchange
     idx = gram_index_table(spark, bkt_t)
-    bucketize_gram_index(bkt_t, base, n_buckets=4)
+    bucketize_index(
+        gram_index_table(spark, bkt_t), base, GRAM_KEYS, n_buckets=4
+    )
     counts = _gram_counts(docs([(99, span + " z z")]))
 
     def probe(frames):
@@ -360,8 +373,8 @@ def test_block_probe_drops_index_exchange_and_matches(
     spark, tmp_path, base
 ):
     from eeg_data_lake_spark.streaming.simhash import (
+        BLOCK_KEYS,
         block_index_table,
-        bucketize_block_index,
         cross_batch_hits,
         simhash_batch_writer,
     )
@@ -386,7 +399,9 @@ def test_block_probe_drops_index_exchange_and_matches(
     bkt_t = TxTable(spark, str(tmp_path / "bkt"))
     wb = simhash_batch_writer(bkt_t, "b", bucketed_base=base)
     wb(docs(b0), 0)
-    bucketize_block_index(bkt_t, base, n_buckets=4)
+    bucketize_index(
+        block_index_table(spark, bkt_t), base, BLOCK_KEYS, n_buckets=4
+    )
     wb(docs(b1), 1)  # probes the projection
     assert {r.doc_id for r in bkt_t.read().collect()} == {
         r.doc_id for r in plain_t.read().collect()
@@ -394,7 +409,9 @@ def test_block_probe_drops_index_exchange_and_matches(
 
     # plan pin on the probe itself
     idx = block_index_table(spark, bkt_t)
-    bucketize_block_index(bkt_t, base, n_buckets=4)
+    bucketize_index(
+        block_index_table(spark, bkt_t), base, BLOCK_KEYS, n_buckets=4
+    )
     probe = simhash_block_rows(
         with_simhash(docs([(99, "alpha beta gamma delta epsilon")]))
         .select("doc_id", "fp_hi", "fp_lo")
@@ -460,15 +477,14 @@ def test_family_compact_hook_keeps_next_trigger_colocated(
     spark, tmp_path, base
 ):
     """End-to-end on the chunk-dedup family: ingest triggers build the
-    index under a projection, compact_chunk_index (+vacuum) runs as
+    index under a projection, compact_index (+vacuum) runs as
     post-batch maintenance, and the NEXT trigger still probes a fresh
     single-frame projection — zero degraded full reads — with content
     identical to a maintenance-free run."""
     from eeg_data_lake_spark.streaming.chunkdedup import (
-        bucketize_chunk_index,
+        CHUNK_KEYS,
         chunk_batch_writer,
         chunk_index_table,
-        compact_chunk_index,
     )
 
     def blobs(pairs):
@@ -487,11 +503,14 @@ def test_family_compact_hook_keeps_next_trigger_colocated(
     bkt_t = TxTable(spark, str(tmp_path / "bkt"))
     wb = chunk_batch_writer(bkt_t, "b", bucketed_base=base)
     wb(blobs(b0), 0)
-    bucketize_chunk_index(bkt_t, base, n_buckets=4)
+    bucketize_index(
+        chunk_index_table(spark, bkt_t), base, CHUNK_KEYS, n_buckets=4
+    )
     wb(blobs(b1), 1)
     # maintenance between triggers: compact + re-project + vacuum
-    refreshed = compact_chunk_index(
-        bkt_t, base, n_buckets=4, max_small_files=1, vacuum_keep_versions=0
+    refreshed = compact_index(
+        chunk_index_table(spark, bkt_t), base, CHUNK_KEYS,
+        n_buckets=4, max_small_files=1, vacuum_keep_versions=0,
     )
     assert refreshed is not None
     idx = chunk_index_table(spark, bkt_t)
@@ -570,11 +589,11 @@ def test_compact_index_repairs_projection_stranded_by_crash(
 
 def test_fp_probe_drops_index_exchange_and_matches(spark, tmp_path, base):
     """The curation dedup probe (strictly-less anti-join on
-    fingerprint) against a bucketize_fp_index projection: zero
+    fingerprint) against a bucketed fp-index projection: zero
     index-side exchange, candidate set identical to the plain read —
     the fifth streaming index family on the base+tail read."""
     from eeg_data_lake_spark.streaming.curation import (
-        bucketize_fp_index,
+        FP_KEYS,
         curation_batch_writer,
         fp_index_table,
     )
@@ -595,7 +614,7 @@ def test_fp_probe_drops_index_exchange_and_matches(spark, tmp_path, base):
     bkt_t = TxTable(spark, str(tmp_path / "bkt"))
     wb = curation_batch_writer(bkt_t, "b", bucketed_base=base)
     wb(docs(b0), 0)
-    bucketize_fp_index(bkt_t, base, n_buckets=4)
+    bucketize_index(fp_index_table(spark, bkt_t), base, FP_KEYS, n_buckets=4)
     wb(docs(b1), 1)  # probes projection (no tail yet)
     wb(docs(b2), 2)  # probes projection + batch-1 tail
     assert {r.doc_id for r in bkt_t.read().collect()} == {
@@ -607,7 +626,7 @@ def test_fp_probe_drops_index_exchange_and_matches(spark, tmp_path, base):
     from pyspark.sql import functions as F2
 
     idx = fp_index_table(spark, bkt_t)
-    bucketize_fp_index(bkt_t, base, n_buckets=4)
+    bucketize_index(fp_index_table(spark, bkt_t), base, FP_KEYS, n_buckets=4)
     probe = spark.createDataFrame(
         [("x", 1), ("y", 99)], "fingerprint string, doc_id long"
     )
@@ -638,20 +657,20 @@ def test_fp_probe_drops_index_exchange_and_matches(spark, tmp_path, base):
     }
 
 
-def test_stream_ingest_maintain_flag_runs_the_compaction_cadence(
+def test_stream_ingest_then_compaction_cadence_refreshes_projection(
     spark, tmp_path, base
 ):
-    """stream_*_ingest(maintain=True) runs the family's compact hook
-    after the drain: with enough small index files the txlog compacts
-    and a stale projection is refreshed, so the NEXT invocation's
-    probes start on a fresh zero-tail projection."""
+    """The family's compact hook (compact_index) run after a
+    stream_*_ingest drain: with enough small index files the txlog
+    compacts and a stale projection is refreshed, so the NEXT
+    invocation's probes start on a fresh zero-tail projection."""
     import os
 
     from pyspark.sql import functions as F2
 
     from eeg_data_lake_spark.streaming.dedup import (
+        BAND_KEYS,
         band_index_table,
-        bucketize_band_index,
         stream_dedup_ingest,
     )
 
@@ -680,7 +699,7 @@ def test_stream_ingest_maintain_flag_runs_the_compaction_cadence(
             [("band0", "0" * 32)], "band_col string, band string"
         )
     )
-    bucketize_band_index(t, base, n_buckets=4)
+    bucketize_index(band_index_table(spark, t), base, BAND_KEYS, n_buckets=4)
     stream_dedup_ingest(
         spark,
         str(src),
@@ -689,9 +708,9 @@ def test_stream_ingest_maintain_flag_runs_the_compaction_cadence(
         str(tmp_path / "ck"),
         sink_id="mnt",
         bucketed_base=base,
-        maintain=True,
     )
-    # whether maintain's own policy pass compacted depends on file
+    compact_index(band_index_table(spark, t), base, BAND_KEYS)
+    # whether the post-drain policy pass compacted depends on file
     # layout (small-file count vs the threshold) — assert the state
     # contract, not which call did the work: the frames read is exact
     frames = index_frames(idx, base)
@@ -700,14 +719,14 @@ def test_stream_ingest_maintain_flag_runs_the_compaction_cadence(
     assert got == want
     # force the cadence with a 1-file threshold; afterwards the
     # projection must be current (fresh from THIS call or already
-    # fresh from maintain's), single-frame, and still at ITS bucket
+    # fresh from the post-drain call), single-frame, and still at ITS bucket
     # count — the refresh derives the live spec, never a caller
     # default (n_buckets=32 here is deliberately 'wrong')
     from eeg_data_lake_spark.sources.indexproj import projection_buckets
-    from eeg_data_lake_spark.streaming.dedup import compact_band_index
 
-    compact_band_index(
-        t, base, n_buckets=32, max_small_files=1, vacuum_keep_versions=0
+    compact_index(
+        band_index_table(spark, t), base, BAND_KEYS,
+        n_buckets=32, max_small_files=1, vacuum_keep_versions=0,
     )
     name, v = newest_projection(spark, base)
     assert v == idx.version()

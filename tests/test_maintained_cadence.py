@@ -4,8 +4,13 @@ the footprints of the full maintenance cadence — a live catalog
 projection of the family's index (so batch 2's probe had a bucketed
 base to read) and a 'compact' commit in the corpus-family txlog
 history — and its terminal result equals the plain (unmaintained)
-registered twin row for row. The z34/z38 analogue of this pin lives
-in tests/test_streaming_curation.py / test_streaming_resolved.py."""
+registered twin row for row. The z34 analogue of this pin lives in
+tests/test_streaming_curation.py.
+
+Every maintained query also compacts its family's index both before
+and after its second drain (``MAINTAINED_ORDER``); the forced
+compaction before it already leaves the 'compact' commit, so only the
+call order shows the one after it."""
 
 from __future__ import annotations
 
@@ -17,6 +22,10 @@ import pytest
 
 from eeg_data_lake_spark.sources.txlog import TxTable, table_history
 from eeg_data_lake_spark.workload import REGISTRY
+
+#: batches 0+1 drain, the forced compaction, batch 2 drains, the
+#: post-drain cadence (the ``maintenance_log`` fixture's events)
+MAINTAINED_ORDER = ["drain", "compact", "drain", "compact"]
 
 CASES = [
     # (maintained, plain twin, scratch prefix, projection prefix,
@@ -50,7 +59,7 @@ CASES = [
     ids=[c[0] for c in CASES],
 )
 def test_maintained_cadence_footprints_and_twin_equality(
-    spark, sf_dir, maintained, twin, prefix, proj, idx_dir
+    spark, sf_dir, maintained, twin, prefix, proj, idx_dir, maintenance_log
 ):
     before = {t.name for t in spark.catalog.listTables()}
     dirs_before = set(
@@ -60,6 +69,7 @@ def test_maintained_cadence_footprints_and_twin_equality(
         tuple(r)
         for r in REGISTRY[maintained].spark_fn(spark, sf_dir).collect()
     ]
+    assert maintenance_log == MAINTAINED_ORDER
 
     projections = [
         t.name
@@ -84,3 +94,14 @@ def test_maintained_cadence_footprints_and_twin_equality(
         tuple(r) for r in REGISTRY[twin].spark_fn(spark, sf_dir).collect()
     ]
     assert got == want
+
+
+@pytest.mark.parametrize(
+    "maintained",
+    ["z38_streaming_minhash_maintained", "z42_streaming_curated_shard_packing"],
+)
+def test_maintenance_runs_after_the_second_drain(
+    spark, sf_dir, maintained, maintenance_log
+):
+    REGISTRY[maintained].spark_fn(spark, sf_dir)
+    assert maintenance_log == MAINTAINED_ORDER

@@ -49,7 +49,7 @@ def measure_shuffle(spark, action):
         return _measure_shuffle(spark, action)
     except ShuffleMetricsUnavailable as exc:
         pytest.skip(str(exc))
-from eeg_data_lake_spark.sources.indexproj import index_frames
+from eeg_data_lake_spark.sources.indexproj import bucketize_index, index_frames
 from eeg_data_lake_spark.sources.txlog import TxTable
 
 SF01 = os.environ.get("SPARK_GRAFT_BUDGET_SF_DIR", "/root/testdata/sf0.1")
@@ -126,15 +126,15 @@ def test_selective_join_never_ships_the_fact_table(spark, no_broadcast):
 
 
 def test_gram_probe_budget_flat_as_index_grows(spark, no_broadcast, proj_base, tmp_path):
-    """The ExactSubstr saturation probe against a bucketize_gram_index
+    """The ExactSubstr saturation probe against a bucketed gram-index
     projection: shuffled records must be FLAT as the index grows (the
     round-6 'no per-trigger term scales with the corpus' claim, now a
     CI assertion — measured 56,520r at BOTH 176k and 342k index rows
     on this fixture), while the plain txlog probe grows with the
     index (measured 62,744r → 228,501r)."""
     from eeg_data_lake_spark.streaming.exactsubstr import (
+        GRAM_KEYS,
         _gram_counts,
-        bucketize_gram_index,
         gram_index_table,
         ingest_batch_writer,
     )
@@ -147,7 +147,9 @@ def test_gram_probe_budget_flat_as_index_grows(spark, no_broadcast, proj_base, t
     w = ingest_batch_writer(t, "budget", bucketed_base=proj_base)
     for i in range(3):
         w(docs.filter(f"doc_id % 4 = {i}"), i)
-    bucketize_gram_index(t, proj_base, n_buckets=4)
+    bucketize_index(
+        gram_index_table(spark, t), proj_base, GRAM_KEYS, n_buckets=4
+    )
     idx = gram_index_table(spark, t)
     idx_small = idx.read().count()
 
@@ -182,7 +184,9 @@ def test_gram_probe_budget_flat_as_index_grows(spark, no_broadcast, proj_base, t
             ),
             10 + i,
         )
-    bucketize_gram_index(t, proj_base, n_buckets=4)
+    bucketize_index(
+        gram_index_table(spark, t), proj_base, GRAM_KEYS, n_buckets=4
+    )
     idx_big = idx.read().count()
     assert idx_big > idx_small * 1.5
     frames2 = index_frames(idx, proj_base)
@@ -205,13 +209,13 @@ def test_block_probe_budget_flat_as_index_grows(
     spark, no_broadcast, proj_base, tmp_path
 ):
     """Same invariant for the SimHash block index: the cross-batch
-    Hamming probe against a bucketize_block_index projection shuffles
+    Hamming probe against a bucketed block-index projection shuffles
     a fixed number of records as the accepted corpus grows."""
     from eeg_data_lake_spark.streaming.simhash import (
+        BLOCK_KEYS,
         FP_COLS,
         _index_rows,
         block_index_table,
-        bucketize_block_index,
         cross_batch_hits,
     )
     from eeg_data_lake_spark.workload.dedup import (
@@ -230,7 +234,9 @@ def test_block_probe_budget_flat_as_index_grows(
         "doc_id", *FP_COLS
     )
     idx.append(_index_rows(fps))
-    bucketize_block_index(t, proj_base, n_buckets=4)
+    bucketize_index(
+        block_index_table(spark, t), proj_base, BLOCK_KEYS, n_buckets=4
+    )
     idx_small = idx.read().count()
 
     probe_rows = (
@@ -264,7 +270,9 @@ def test_block_probe_budget_flat_as_index_grows(
             fps.withColumn("doc_id", F.col("doc_id") + 2_000_000)
         )
     )
-    bucketize_block_index(t, proj_base, n_buckets=4)
+    bucketize_index(
+        block_index_table(spark, t), proj_base, BLOCK_KEYS, n_buckets=4
+    )
     idx_big = idx.read().count()
     assert idx_big > idx_small * 1.5
     frames2 = index_frames(idx, proj_base)
@@ -287,12 +295,12 @@ def test_fp_probe_budget_flat_as_index_grows(
     spark, no_broadcast, proj_base, tmp_path
 ):
     """Same invariant for the curation fingerprint index: the
-    strictly-less dedup anti-join against a bucketize_fp_index
+    strictly-less dedup anti-join against a bucketed fp-index
     projection shuffles a fixed number of records as the accepted
     corpus grows."""
     from eeg_data_lake_spark.streaming.curation import (
+        FP_KEYS,
         _fingerprint,
-        bucketize_fp_index,
         fp_index_table,
     )
 
@@ -305,7 +313,7 @@ def test_fp_probe_budget_flat_as_index_grows(
         "fingerprint", "doc_id"
     )
     idx.append(fp_rows(docs.filter("doc_id % 3 = 0")))
-    bucketize_fp_index(t, proj_base, n_buckets=4)
+    bucketize_index(fp_index_table(spark, t), proj_base, FP_KEYS, n_buckets=4)
     idx_small = idx.read().count()
 
     probe_rows = fp_rows(
@@ -337,7 +345,7 @@ def test_fp_probe_budget_flat_as_index_grows(
         idx.append(
             fp_rows(docs.withColumn("doc_id", F.col("doc_id") + shift))
         )
-    bucketize_fp_index(t, proj_base, n_buckets=4)
+    bucketize_index(fp_index_table(spark, t), proj_base, FP_KEYS, n_buckets=4)
     idx_big = idx.read().count()
     assert idx_big > idx_small * 1.5
     frames2 = index_frames(idx, proj_base)
@@ -357,13 +365,12 @@ def test_resolved_posting_probe_budget_flat_as_index_grows(
     spark, no_broadcast, proj_base, tmp_path
 ):
     """Same invariant for the RESOLVED near-dup family (z32/z33): the
-    cross-pair probe against a bucketize_posting_index projection
+    cross-pair probe against a bucketed posting-index projection
     shuffles a fixed number of records as the posting index grows —
     the property that makes the order-independent ingest 100 TB-safe
     (per-trigger cost batch-sized, never corpus-sized). Plain probes
     grow with the index."""
     from eeg_data_lake_spark.streaming.resolved import (
-        bucketize_posting_index,
         minhash_resolved_family,
         posting_table,
     )
@@ -384,7 +391,9 @@ def test_resolved_posting_probe_budget_flat_as_index_grows(
         )
 
     idx.append(fam.index_rows(groups_of(docs.filter("doc_id % 3 = 0"))))
-    bucketize_posting_index(t, fam, proj_base, n_buckets=4)
+    bucketize_index(
+        posting_table(spark, t), proj_base, fam.probe_keys, n_buckets=4
+    )
     idx_small = idx.read().count()
 
     probe_groups = groups_of(docs.filter("doc_id % 3 = 1"))
@@ -419,7 +428,9 @@ def test_resolved_posting_probe_budget_flat_as_index_grows(
                 )
             )
         )
-    bucketize_posting_index(t, fam, proj_base, n_buckets=4)
+    bucketize_index(
+        posting_table(spark, t), proj_base, fam.probe_keys, n_buckets=4
+    )
     idx_big = idx.read().count()
     assert idx_big > idx_small * 1.5
     frames2 = index_frames(idx, proj_base)
@@ -439,14 +450,14 @@ def test_chunk_probe_budget_flat_as_index_grows(
     spark, no_broadcast, proj_base, tmp_path
 ):
     """The CDC chunk-store novelty probe against a
-    bucketize_chunk_index projection: shuffled records must be FLAT
+    bucketed chunk-index projection: shuffled records must be FLAT
     as the chunk index grows — completing the per-family flatness
     pins (gram/block/fp/resolved-posting above) for the round-9
     maintained family z40. The plain txlog probe is the growth
     control."""
     from eeg_data_lake_spark.functions.chunking import chunk_rows
     from eeg_data_lake_spark.streaming.chunkdedup import (
-        bucketize_chunk_index,
+        CHUNK_KEYS,
         chunk_batch_writer,
         chunk_index_table,
         novel_against,
@@ -462,7 +473,9 @@ def test_chunk_probe_budget_flat_as_index_grows(
     w = chunk_batch_writer(t, "budget", bucketed_base=proj_base)
     for i in range(3):
         w(blobs.filter(f"doc_id % 4 = {i}"), i)
-    bucketize_chunk_index(t, proj_base, n_buckets=4)
+    bucketize_index(
+        chunk_index_table(spark, t), proj_base, CHUNK_KEYS, n_buckets=4
+    )
     idx = chunk_index_table(spark, t)
     idx_small = idx.read().count()
 
@@ -497,7 +510,9 @@ def test_chunk_probe_budget_flat_as_index_grows(
     ).select("doc_id", "payload")
     for i in range(3):
         w(salted.filter(f"doc_id % 4 = {i}"), 10 + i)
-    bucketize_chunk_index(t, proj_base, n_buckets=4)
+    bucketize_index(
+        chunk_index_table(spark, t), proj_base, CHUNK_KEYS, n_buckets=4
+    )
     idx_big = idx.read().count()
     assert idx_big > idx_small * 1.5, (idx_small, idx_big)
     frames2 = index_frames(idx, proj_base)

@@ -20,10 +20,10 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from eeg_data_lake_spark.sources.indexproj import bucketize_index, compact_index
 from eeg_data_lake_spark.sources.txlog import TxTable
 from eeg_data_lake_spark.streaming.exactsubstr import (
-    bucketize_gram_index,
-    compact_gram_index,
+    GRAM_KEYS,
     exact_substring_removal,
     gram_index_table,
     ingest_batch_writer,
@@ -87,11 +87,14 @@ def test_natural_policy_cadence_bounds_files_and_keeps_oracle(
             )
         w(batch, i)
         if i == 0:
-            bucketize_gram_index(tbl, base, n_buckets=4)
+            bucketize_index(
+                gram_index_table(spark, tbl), base, GRAM_KEYS, n_buckets=4
+            )
         fires.append(
-            compact_gram_index(
-                tbl,
+            compact_index(
+                gram_index_table(spark, tbl),
                 base,
+                GRAM_KEYS,
                 n_buckets=4,
                 max_small_files=MAX_SMALL,
                 vacuum_keep_versions=2,
@@ -136,10 +139,9 @@ def test_chunk_family_natural_cadence_bounds_files_and_keeps_oracle(
         attach_binary_payload,
     )
     from eeg_data_lake_spark.streaming.chunkdedup import (
-        bucketize_chunk_index,
+        CHUNK_KEYS,
         chunk_batch_writer,
         chunk_index_table,
-        compact_chunk_index,
         dedup_report,
     )
 
@@ -175,11 +177,14 @@ def test_chunk_family_natural_cadence_bounds_files_and_keeps_oracle(
             )
         w(batch, i)
         if i == 0:
-            bucketize_chunk_index(tbl, base, n_buckets=4)
+            bucketize_index(
+                chunk_index_table(spark, tbl), base, CHUNK_KEYS, n_buckets=4
+            )
         fires.append(
-            compact_chunk_index(
-                tbl,
+            compact_index(
+                chunk_index_table(spark, tbl),
                 base,
+                CHUNK_KEYS,
                 n_buckets=4,
                 max_small_files=MAX_SMALL,
                 vacuum_keep_versions=2,

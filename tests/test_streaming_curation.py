@@ -181,11 +181,8 @@ def test_crash_between_any_two_legs_replays_exactly_once(
     w = curation_batch_writer(table, "s")
     w(_batch(spark, planted, 0), 0)
 
-    # the crash seam is the manifest COMMIT (TxTable.commit_staged):
-    # with stage_concurrently the legs' data files are written before
-    # any commit, but staged files are invisible orphans — "crash
-    # before the crash_at-th commit" is the same window the append
-    # seam used to inject
+    # the crash seam is the manifest COMMIT (TxTable.commit_staged),
+    # through which every leg's append commits
     real_commit = TxTable.commit_staged
     seen = {"n": 0}
 
@@ -297,7 +294,9 @@ def test_backfill_crash_between_index_seeds_recovers(
     assert _rows(curated_rollup(table)) == want
 
 
-def test_z34_maintained_cadence_runs_and_matches_z31(spark, sf_dir):
+def test_z34_maintained_cadence_runs_and_matches_z31(
+    spark, sf_dir, maintenance_log
+):
     """The registered z34 must not be a vacuous twin: it leaves the
     footprints of the full maintenance cadence — a live catalog
     projection of the fingerprint index (so batch 2's probe had a
@@ -313,6 +312,8 @@ def test_z34_maintained_cadence_runs_and_matches_z31(spark, sf_dir):
         spark, sf_dir
     )
     got_rows = [tuple(r) for r in got.collect()]
+    # the fingerprint index compacts before AND after batch 2's drain
+    assert maintenance_log == ["drain", "compact", "drain", "compact"]
 
     projections = [
         t.name

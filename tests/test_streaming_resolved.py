@@ -256,15 +256,16 @@ def test_postings_stay_one_row_per_distinct_key(spark, tmp_path, planted):
 
 
 def test_bucketed_probe_path_is_output_invisible(spark, tmp_path, planted):
-    """Draining with a bucketize_posting_index projection (built after
+    """Draining with a bucketed posting-index projection (built after
     batch 0, refreshed by compact_resolved_state mid-stream) must
     resolve to exactly the plain-probe winner set — co-location is a
     physical choice, never a semantic one."""
     import uuid
 
+    from eeg_data_lake_spark.sources.indexproj import bucketize_index
     from eeg_data_lake_spark.streaming.resolved import (
-        bucketize_posting_index,
         compact_resolved_state,
+        posting_table,
     )
 
     fam = minhash_resolved_family()
@@ -272,7 +273,9 @@ def test_bucketed_probe_path_is_output_invisible(spark, tmp_path, planted):
     tbl = TxTable(spark, str(tmp_path / "mhb"))
     w = resolved_batch_writer(tbl, fam, "t32b", bucketed_base=base)
     w(_batch(spark, planted, 0), 0)
-    bucketize_posting_index(tbl, fam, base, n_buckets=4)
+    bucketize_index(
+        posting_table(spark, tbl), base, fam.probe_keys, n_buckets=4
+    )
     w(_batch(spark, planted, 1), 1)
     compact_resolved_state(
         tbl, fam, base, max_small_files=1, vacuum_keep_versions=2

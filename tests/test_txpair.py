@@ -153,17 +153,12 @@ def test_backfill_covers_crashed_first_batch_with_set_semantics(
     assert _ids(idx) == [10, 20]
 
 
-def _chained_crash_matrix(spark, tmp_path, monkeypatch, concurrent):
+def _chained_crash_matrix(spark, tmp_path, monkeypatch):
     """The N-leg generalization, property-tested centrally like the
     pair: for a corpus + three index legs, crash before EVERY manifest
     commit position (1 = corpus, 2..4 = legs), replay the batch, and
     require final content identical to an uncrashed run — with
-    committed prefix legs' derivations NEVER re-invoked on replay.
-
-    Run in BOTH modes: serial (append per leg, the original seam) and
-    stage_concurrently (data writes overlapped, commits still strictly
-    ordered through TxTable.commit_staged — the round-11 seam). The
-    crash window "between commit k and k+1" is identical in both."""
+    committed prefix legs' derivations NEVER re-invoked on replay."""
     from eeg_data_lake_spark.streaming.txpair import chained_commit
 
     def run_once(root, crash_at=None):
@@ -189,12 +184,11 @@ def _chained_crash_matrix(spark, tmp_path, monkeypatch, concurrent):
                 [(idxs[k], leg(k), f"tag{k}") for k in range(3)],
                 "s",
                 7,
-                stage_concurrently=concurrent,
             )
 
         if crash_at is not None:
-            # bomb the COMMIT seam: in serial mode append() routes
-            # through commit_staged too, so one seam covers both modes
+            # bomb the COMMIT seam: append() routes through
+            # commit_staged
             real_commit = TxTable.commit_staged
             state = {"n": 0}
 
@@ -238,82 +232,4 @@ def _chained_crash_matrix(spark, tmp_path, monkeypatch, concurrent):
 def test_chained_commit_crash_matrix_every_prefix_then_replay(
     spark, tmp_path, monkeypatch
 ):
-    _chained_crash_matrix(spark, tmp_path, monkeypatch, concurrent=False)
-
-
-def test_chained_commit_crash_matrix_concurrent_staging(
-    spark, tmp_path, monkeypatch
-):
-    _chained_crash_matrix(spark, tmp_path, monkeypatch, concurrent=True)
-
-
-def test_concurrent_staging_crash_during_stage_commits_nothing(
-    spark, tmp_path, monkeypatch
-):
-    """Crash while ANY leg's data-write job is in flight (the stage
-    seam, which only exists in the concurrent mode): since every
-    commit happens strictly after all staging completes, a staging
-    failure must leave ZERO commits on every table — staged files are
-    invisible orphans — and the replay re-derives everything and
-    converges to the uncrashed content."""
-    from eeg_data_lake_spark.streaming.txpair import chained_commit
-
-    table = TxTable(spark, str(tmp_path / "t"))
-    idxs = [TxTable(spark, str(tmp_path / f"i{k}")) for k in range(2)]
-    calls = {"corpus": 0, 0: 0, 1: 0}
-
-    def commit():
-        chained_commit(
-            table,
-            lambda: (
-                calls.__setitem__("corpus", calls["corpus"] + 1),
-                _df(spark, [1, 2]),
-            )[1],
-            [
-                (
-                    idxs[k],
-                    (
-                        lambda k=k: (
-                            calls.__setitem__(k, calls[k] + 1),
-                            _df(spark, [100 * (k + 1)]),
-                        )[1]
-                    ),
-                    f"tag{k}",
-                )
-                for k in range(2)
-            ],
-            "s",
-            3,
-            stage_concurrently=True,
-        )
-
-    real_stage = TxTable.stage
-    import threading
-
-    lock = threading.Lock()
-    state = {"n": 0}
-
-    def bomb(self, df):
-        with lock:
-            state["n"] += 1
-            n = state["n"]
-        if n == 2:  # some leg's staging dies mid-flight
-            raise RuntimeError("crash")
-        return real_stage(self, df)
-
-    monkeypatch.setattr(TxTable, "stage", bomb)
-    try:
-        commit()
-        raise AssertionError("bomb did not fire")
-    except RuntimeError:
-        pass
-    finally:
-        monkeypatch.undo()
-    # nothing committed anywhere: staged files are invisible orphans
-    assert table.version() == -1
-    assert all(i.version() == -1 for i in idxs)
-
-    commit()  # replay re-derives every leg and converges
-    assert _ids(table) == [1, 2]
-    assert [_ids(i) for i in idxs] == [[100], [200]]
-    assert calls["corpus"] == 2 and calls[0] == 2 and calls[1] == 2
+    _chained_crash_matrix(spark, tmp_path, monkeypatch)
